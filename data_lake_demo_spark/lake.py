@@ -78,14 +78,10 @@ class Lake:
         work = plan_work(self.spark, ingestion_date, endpoints, pages)
         records = mock_fetch(work)
         (
-            # per-(source, date, page) tasks → one file per page, the
-            # reference's layout (worker.py:27-28); explicit partition
-            # count so AQE doesn't coalesce the tiny shuffle into one
-            # file per dir. compact_partition merges them later.
-            records.repartition(
-                len(endpoints) * pages, "source", "ingestion_date", "page"
-            )
-            .write.mode("overwrite")
+            # one work unit per task (plan_work) → one file per page,
+            # the reference's layout (worker.py:27-28), with no shuffle
+            # to collide pages; compact_partition merges them later.
+            records.write.mode("overwrite")
             .partitionBy(*RAW_PARTITIONS)
             .option("compression", "gzip")
             .json(self.raw_path)

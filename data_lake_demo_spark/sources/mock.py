@@ -3,7 +3,8 @@
 Reference behavior being re-expressed (cited for parity checking):
 - planner enumerates endpoints × pages 1..10 for a date and emits one
   work unit each (planner.py:37-49) → here a deterministic work
-  DataFrame built with ``crossJoin`` (SURVEY S3).
+  DataFrame with one unit per partition (SURVEY S3), the reference's
+  one worker invocation per unit.
 - the mock fetch returns a page payload with exactly 5 items
   ``{id: f"{endpoint}-{date}-{page}-{i}", value: i}`` and an ISO-8601
   fetched_at (worker.py:86-108) → here pure JVM column expressions
@@ -31,13 +32,17 @@ def plan_work(
     endpoints: Sequence[str] = DEFAULT_ENDPOINTS,
     pages: int = PAGES_PER_ENDPOINT,
 ) -> DataFrame:
-    """The planner: endpoints × pages(1..N) for one date."""
-    eps = spark.createDataFrame(
-        [(e,) for e in endpoints], "endpoint string"
-    )
-    page_df = spark.range(1, pages + 1).select(F.col("id").alias("page"))
-    return eps.crossJoin(page_df).select(
-        "endpoint", F.lit(ingestion_date).alias("ingestion_date"), "page"
+    """The planner: endpoints × pages(1..N) for one date, endpoint-major,
+    ONE work unit per partition — so every narrow stage downstream
+    (fetch, raw write) handles each page in its own task."""
+    n = len(endpoints) * pages
+    eps = F.array(*[F.lit(e) for e in endpoints])
+    return spark.range(0, n, 1, n).select(
+        F.element_at(eps, F.expr(f"CAST(id DIV {pages} AS INT) + 1")).alias(
+            "endpoint"
+        ),
+        F.lit(ingestion_date).alias("ingestion_date"),
+        (F.col("id") % pages + 1).alias("page"),
     )
 
 

@@ -52,10 +52,11 @@ source shape, expressed through Spark 4's Python Data Source API
   bounded by the files one commit touched, which the MERGE/DELETE
   file skipping already minimizes; for WIDE commits (a full-table
   rewrite), ``.option('changeDiffBuckets', m)`` decomposes each
-  commit's diff into m deterministic row-hash buckets — m-way
-  parallelism and 1/m per-task memory at m× read amplification
-  (rid-keyed buckets when ids are read, so image pairing survives). The same option on a BATCH read
-  returns a commit range's change rows
+  commit's diff into m deterministic shares — contiguous row-id
+  ranges when ids are read and their spans are provable (row-group
+  skipping), else row-hash buckets (m× read amplification; rid-keyed
+  when ids are read, so image pairing survives). The same option on
+  a BATCH read returns a commit range's change rows
   (``startingVersion``/``endingVersion`` — Delta's ``table_changes``).
 - **Row ids.** ``withRowIds=true`` (row-tracking tables,
   ``AcidTable.set_row_tracking()``) appends the stable ``_row_id``
@@ -72,6 +73,18 @@ source shape, expressed through Spark 4's Python Data Source API
 Batch symmetry: ``spark.read.format("acidtable").load(path)`` reads
 the live snapshot through the same planner (one partition per live
 file), so both engines resolve the table from the one commit log.
+
+Executors: every partition — a snapshot or append-stream file, or a
+commit's change diff — runs one Arrow kernel (``_read_partition``)
+that emits RecordBatches in the output schema; there is no other
+runtime path, so a kernel error fails the task with its own message.
+Every column is read under its output type: a file written before a
+type widening compares and emits widened, a naive parquet timestamp
+(Spark's INT96) is the UTC instant Spark's own parquet reader returns
+for a TIMESTAMP column (TIMESTAMP_NTZ stays naive), and nested
+columns (array / map / struct) work in every read mode. The
+row-at-a-time oracle the kernels are tested against lives in
+``tests/acid_oracle.py``.
 
 Write symmetry (round 6): ``df.write.format("acidtable")`` appends
 (``mode("append")``) or atomically replaces (``mode("overwrite")``)
@@ -114,8 +127,13 @@ import json
 import os
 from datetime import datetime, timezone
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -126,7 +144,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from data_lake_demo_spark.tableformat import CommitConflict, _dv_abs
+from data_lake_demo_spark.tableformat import CommitConflict, _dv_abs, _unpack_dv
 
 _CHANGE_OPS = {"merge", "merge_delete", "delete", "overwrite", "scd2",
                "compact", "optimize_zorder", "optimize_cluster", "restore"}
@@ -185,8 +203,7 @@ class _ChangePartition(InputPartition):
         self.bucket = bucket
         # rid-RANGE scoping (r12, rid-reading modes only): this task
         # owns rows whose stable id falls in [lo, hi) (None = open
-        # end; the lo=None partition also owns null ids). Unlike the
-        # crc32 hash buckets, contiguous ranges let the executor skip
+        # end). Unlike hash buckets, contiguous ranges let the executor skip
         # whole parquet ROW GROUPS via footer min/max — the m× read
         # amplification the hash decomposition paid disappears. An
         # update's delete+insert pair shares its id, so pairing and
@@ -194,720 +211,264 @@ class _ChangePartition(InputPartition):
         self.rid_range = rid_range
 
 
-def _read_parquet_rows(
-    path: str,
-    fields: list[str],
-    dv: str | None = None,
-    rid_base: int | None = None,
-    with_rid: bool = False,
-):
-    """Executor-side file read: yield tuples in schema field order,
-    padding columns the file predates (additive evolution) with None.
-    ``dv`` masks merge-on-read-deleted rows by position.
-
-    ``with_rid=True`` appends the stable row id as the LAST element of
-    each tuple — the materialized hidden ``__row_id`` column when the
-    file carries one (rewrites), else ``rid_base`` + the PHYSICAL row
-    position (pre-mask, matching tableformat's base + _metadata.
-    row_index derivation), else None (file predates tracking)."""
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(path)
-    cols = []
-    n = tbl.num_rows
-    for f in fields:
-        if f in tbl.column_names:
-            cols.append(tbl.column(f).to_pylist())
-        else:
-            cols.append([None] * n)
-    if not n:
-        return
-    if with_rid:
-        # mirror AcidTable._attach_row_ids: coalesce(materialized,
-        # base + physical position)
-        if "__row_id" in tbl.column_names:
-            mat = tbl.column("__row_id").to_pylist()
-            if rid_base is None:
-                cols.append(mat)
-            else:
-                cols.append(
-                    [m if m is not None else rid_base + i
-                     for i, m in enumerate(mat)]
-                )
-        elif rid_base is not None:
-            cols.append(list(range(rid_base, rid_base + n)))
-        else:
-            cols.append([None] * n)
-    if dv:
-        from data_lake_demo_spark.tableformat import _unpack_dv
-
-        skip = set(_unpack_dv(dv))
-        for i, row in enumerate(zip(*cols)):
-            if i not in skip:
-                yield row
-        return
-    yield from zip(*cols)
-
-
-def _read_change_rows(
-    part: _ChangePartition,
-    fields: list[str],
-    with_rid: bool = False,
-    as_images: bool = False,
-):
-    """Executor-side net row diff for one commit (CDF mode): rows
-    present after-but-not-before are inserts, before-but-not-after
-    are deletes — multiset semantics (Counter), so duplicate rows
-    diff correctly. A pure-layout commit (compact / zorder) has
-    identical multisets and yields an EMPTY feed, matching
-    ``AcidTable.changes``. Memory is O(files this commit touched) —
-    bounded by the same file skipping that produced the commit.
-
-    ``with_rid=True`` (row-tracking tables) includes the stable row id
-    in the diff KEY and appends it as the row's last column: because
-    rewrites PRESERVE ids, carried rows still cancel (the old side
-    derives base+position, the new side reads the materialized column
-    — same value), layout commits still diff to empty, and an update's
-    delete+insert pair SHARES its id — the pairing contract that lets
-    a downstream consumer reconstruct row-level updates without a
-    natural key.
-
-    ``as_images=True`` (the ``updateAsImages`` reader option) FOLDS
-    that pairing into Delta's 4-value change-type enum executor-side:
-    a delete and an insert sharing a row id within one commit relabel
-    to ``update_preimage``/``update_postimage`` (MERGE and MOR verbs
-    included); unpaired rows keep insert/delete. Requires row
-    tracking — ids are read for the pairing even when the consumer
-    didn't ask for the ``_row_id`` column (they're dropped again at
-    emission unless ``with_rid``)."""
-    from collections import Counter
-
-    def key(v):
-        # nested parquet values (array/map columns) arrive as Python
-        # lists/dicts — unhashable; build a canonical hashable key
-        # while keeping the ORIGINAL row for emission. Float NaN is
-        # mapped to a sentinel: tuple keys use Python equality where
-        # NaN != NaN, so NaN-bearing rows would never cancel between
-        # the removed/added multisets and a pure-layout compaction
-        # would emit spurious delete+insert pairs — AcidTable.changes
-        # (exceptAll) treats NaN as equal, and so must we.
-        if isinstance(v, float) and v != v:
-            return ("__nan",)
-        if isinstance(v, list):
-            return ("__l", tuple(key(x) for x in v))
-        if isinstance(v, dict):
-            return ("__d", tuple(sorted((k, key(x)) for k, x in v.items())))
-        return v
-
-    read_rid = with_rid or as_images
-    bucket = part.bucket
-    rid_range = part.rid_range
-
-    def in_range(k) -> bool:
-        # rid-RANGE partition ownership (reference twin of the kernel's
-        # range mask): rid in [lo, hi), open ends unbounded; a null rid
-        # (file predating tracking) belongs to the FIRST range (lo None)
-        lo, hi = rid_range
-        rid = k[-1]
-        if rid is None:
-            return lo is None
-        return (lo is None or rid >= lo) and (hi is None or rid < hi)
-
-    def bucket_of(k) -> int:
-        # deterministic across processes (no reliance on
-        # PYTHONHASHSEED): crc32 of the canonical key's repr. In rid
-        # mode the row id alone is the bucket key, so an update's
-        # delete+insert pair — different content, same id — stays
-        # co-bucketed and image pairing survives the decomposition.
-        import zlib
-
-        kk = k[-1] if read_rid and k[-1] is not None else k
-        return zlib.crc32(repr(kk).encode()) % bucket[1]
-
-    def load(entries):
-        counts: Counter = Counter()
-        originals: dict = {}
-        for p, dv, base in entries:
-            for row in _read_parquet_rows(p, fields, dv, base, read_rid):
-                k = tuple(key(v) for v in row)
-                if bucket is not None and bucket_of(k) != bucket[0]:
-                    continue  # another bucket's task owns this row
-                if rid_range is not None and not in_range(k):
-                    continue  # another range's task owns this row
-                counts[k] += 1
-                originals[k] = row
-        return counts, originals
-
-    after, rows_a = load(part.adds)
-    before, rows_b = load(part.removes)
-    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
-    # Delta's 4-value change-type enum: an UPDATE commit's net diff is
-    # exactly the updated rows (copied-unchanged rows cancel in the
-    # multiset diff), so its deletes ARE preimages and its inserts ARE
-    # postimages — labeling rides the commit operation, matching how
-    # Delta derives CDF types from the command, not from row pairing.
-    # (MERGE stays insert/delete: its commits mix updates with true
-    # inserts/deletes and the log has no row-level provenance.)
-    is_update = part.op == "update"
-    ins_label = "update_postimage" if is_update else "insert"
-    del_label = "update_preimage" if is_update else "delete"
-    def emit(row, label):
-        if with_rid:  # rid rides LAST in the output schema, after the
-            # CDF metadata columns — the read tuples carry it last too
-            return (*row[:-1], label, part.version, commit_ts, row[-1])
-        if read_rid:  # rid was read only for image pairing: drop it
-            return (*row[:-1], label, part.version, commit_ts)
-        return (*row, label, part.version, commit_ts)
-
-    # repr-keyed sort: deterministic output order even when column
-    # types are mixed/nested (raw tuple comparison would TypeError)
-    ins_items = sorted((after - before).items(), key=lambda kv: repr(kv[0]))
-    del_items = sorted((before - after).items(), key=lambda kv: repr(kv[0]))
-    paired: set = set()
-    if as_images and not is_update:
-        # id-paired delete+insert within ONE commit = a row UPDATE
-        # (rewrites preserve ids; MERGE/MOR matched rows inherit them)
-        del_rids = {k[-1] for k, _ in del_items if k[-1] is not None}
-        ins_rids = {k[-1] for k, _ in ins_items if k[-1] is not None}
-        paired = del_rids & ins_rids
-    for k, n in ins_items:
-        lbl = "update_postimage" if paired and k[-1] in paired else ins_label
-        for _ in range(n):
-            yield emit(rows_a[k], lbl)
-    for k, n in del_items:
-        lbl = "update_preimage" if paired and k[-1] in paired else del_label
-        for _ in range(n):
-            yield emit(rows_b[k], lbl)
-
-
-#: arrow types the vectorized diff compares with pyarrow.compute —
-#: everything else (nested, dictionary, mixed-per-file) falls back to
-#: the row-at-a-time reference path for that PARTITION
-def _vec_comparable(t) -> bool:
-    import pyarrow.types as pt
-
-    return (
-        pt.is_integer(t)
-        or pt.is_floating(t)
-        or pt.is_boolean(t)
-        or pt.is_string(t)
-        or pt.is_large_string(t)
-        or pt.is_binary(t)
-        or pt.is_large_binary(t)
-        or pt.is_date(t)
-        or pt.is_timestamp(t)
-        or pt.is_decimal(t)
-    )
-
-
 def _rid_range_read(path: str, base, rng: tuple):
-    """Row-group-scoped file read for a rid-RANGE partition (r12
-    verdict item 6): select only the row groups whose rid span —
-    footer ``__row_id`` min/max statistics when the file carries the
-    materialized column, else ``base`` + the group's position window —
-    can intersect ``[lo, hi)``. Each of a commit's m range tasks then
-    reads ~1/m of the touched bytes instead of re-reading every file,
-    which is the m× amplification the crc32 hash-bucket decomposition
-    paid (a hash bucket's rows are scattered uniformly through every
-    row group, so nothing could be skipped).
+    """Row-group-scoped file read for a rid-RANGE partition: select
+    only the row groups whose rid span — footer ``__row_id`` min/max
+    statistics when the file carries the materialized column, else
+    ``base`` + the group's position window — can intersect
+    ``[lo, hi)``. Each of a commit's m range tasks then reads ~1/m of
+    the touched bytes instead of re-reading every file (a hash
+    bucket's rows are scattered through every row group, so nothing
+    could be skipped).
 
     Returns ``(arrow_table, positions, total_rows)`` where
     ``positions`` are the FILE-ABSOLUTE row indices of the rows read
     (the deletion-vector mask and ``base``-derived rids are keyed on
-    physical position), or ``None`` when any row group's rid span is
-    unknowable (stats missing, or possible nulls with no manifest
-    base) — the caller falls back exactly as for any other
-    precondition miss. A group whose ``__row_id`` column may contain
+    physical position). A group whose ``__row_id`` column may contain
     nulls widens its span with the ``base + position`` window the
-    null coalesce would produce."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
+    null coalesce would produce. Raises when a group's span is
+    unknowable (stats missing, or possible nulls with no manifest
+    base): ``_rid_file_intervals`` plans rid ranges only over files
+    whose spans it proved from the same footers."""
     lo, hi = rng
-    f = pq.ParquetFile(path)
+    f = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
     md = f.metadata
     names = [md.schema.column(i).name for i in range(md.num_columns)]
     rid_idx = names.index("__row_id") if "__row_id" in names else None
     sel, pos_parts, off = [], [], 0
     for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        nrows = rg.num_rows
+        nrows = md.row_group(g).num_rows
         if rid_idx is not None:
-            st = rg.column(rid_idx).statistics
+            st = md.row_group(g).column(rid_idx).statistics
             if st is None or not st.has_min_max:
-                return None
+                raise ValueError(
+                    f"{path}: row group {g} has no __row_id statistics; "
+                    "its row-id span is unprovable"
+                )
             glo, ghi = int(st.min), int(st.max) + 1
             nulls = st.null_count if st.has_null_count else None
             if nulls is None or nulls:
                 if base is None:
-                    return None  # null rids, no base: kernel bails anyway
+                    raise ValueError(
+                        f"{path}: row group {g} may hold null row ids "
+                        "and the file has no manifest base"
+                    )
                 glo = min(glo, base + off)
                 ghi = max(ghi, base + off + nrows)
         elif base is not None:
             glo, ghi = base + off, base + off + nrows
         else:
-            return None
+            raise ValueError(f"{path}: no __row_id column and no manifest base")
         if (lo is None or ghi > lo) and (hi is None or glo < hi):
             sel.append(g)
             pos_parts.append(np.arange(off, off + nrows, dtype=np.int64))
         off += nrows
-    if not sel:
-        return None, np.empty(0, dtype=np.int64), md.num_rows
-    tbl = f.read_row_groups(sel)
-    return tbl, np.concatenate(pos_parts), md.num_rows
+    pos = np.concatenate(pos_parts) if pos_parts else np.empty(0, np.int64)
+    return f.read_row_groups(sel), pos, md.num_rows
 
 
-def _rid_change_batches(
-    part: _ChangePartition,
+def _read_file(
+    path: str,
     fields: list[str],
-    with_rid: bool,
-    as_images: bool,
-    spark_schema,
+    types: list,
+    dv: str | None = None,
+    base: int | None = None,
+    with_rid: bool = False,
+    rng: tuple | None = None,
 ):
-    """Vectorized (Arrow + numpy) twin of ``_read_change_rows`` for the
-    rid-reading modes (``withRowIds`` / ``updateAsImages``): returns a
-    list of ``pyarrow.RecordBatch`` in the source's output schema, or
-    ``None`` when any precondition fails — the caller then runs the
-    row-at-a-time reference path, so the failure mode is exactly the
-    old behavior.
+    """One data file as ``(arrow table over fields, int64 row ids or
+    None)``, with rows in file order.
 
-    Why this is EXACTLY the reference diff in rid mode: the multiset
-    key there is ``(row content…, _row_id)`` and stable row ids are
-    unique among the live rows of a snapshot (verified per side below;
-    violated → fall back), so every multiset count is 1 and the
-    Counter diff degenerates to a map diff keyed by rid:
+    Every column is cast to its output Arrow type on load, so all
+    files of a read compare and emit under one type per column:
 
-    * rid in both sides, content equal          → cancels (not emitted)
-    * rid in both sides, content differs        → delete + insert pair
-      (= the ``paired`` set: rids in both net sides)
-    * rid only after / only before              → insert / delete
+    * a file written before a type widening reads under the widened
+      type — every promotion the table format allows is
+      value-preserving, so comparing under the target type is exact;
+    * a naive parquet timestamp (Spark writes TIMESTAMP as INT96) is
+      the UTC instant Spark's own parquet reader returns for a
+      TIMESTAMP column; a TIMESTAMP_NTZ column stays naive;
+    * nested columns (array / map / struct) pass through unchanged;
+    * a column the file predates reads as typed nulls.
 
-    Content equality replicates the reference ``key()`` semantics
-    column-wise with arrow kernels: ``pc.equal`` + both-null +
-    (floats) both-NaN — None ≠ NaN exactly as the sentinel encodes it.
-    Columns whose per-file arrow types disagree across the two sides
-    (mid-evolution commits) abort to the reference path rather than
-    compare under arrow's promoted type (int64→float64 promotion is
-    lossy above 2^53 where Python's int==float is exact).
+    ``dv`` masks merge-on-read-deleted rows by physical position.
+    ``with_rid`` derives the stable row id exactly like the table API:
+    the materialized ``__row_id`` column where a rewrite wrote one,
+    coalesced with ``base`` + physical position, else null. ``rng``
+    scopes the read to a rid-range partition: the row groups that can
+    hold its ids, then exactly the rows whose id lies in ``[lo, hi)``."""
+    if rng is None:
+        tbl = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").read()
+        total = tbl.num_rows
+        pos = np.arange(total, dtype=np.int64)
+    else:
+        tbl, pos, total = _rid_range_read(path, base, rng)
+    names = set(tbl.column_names)
+    cols = []
+    for f, t in zip(fields, types):
+        if f not in names:
+            cols.append(pa.nulls(tbl.num_rows, t))
+            continue
+        c = tbl.column(f)
+        cols.append(c if c.type == t else c.cast(t))
+    rid = None
+    if with_rid:
+        if "__row_id" in names:
+            rid = tbl.column("__row_id").combine_chunks().cast(pa.int64())
+            if rid.null_count and base is not None:
+                rid = pc.coalesce(rid, pa.array(base + pos))
+        elif base is not None:
+            rid = pa.array(base + pos)
+        else:
+            rid = pa.nulls(tbl.num_rows, pa.int64())
+    keep = None
+    if dv:
+        keep_full = np.ones(total, dtype=bool)
+        skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
+        keep_full[skip[skip < total]] = False
+        keep = keep_full[pos]
+    if rng is not None:
+        lo, hi = rng
+        ids = rid.to_numpy(zero_copy_only=False)
+        own = np.ones(ids.size, dtype=bool)
+        if lo is not None:
+            own &= ids >= lo
+        if hi is not None:
+            own &= ids < hi
+        keep = own if keep is None else keep & own
+    if keep is not None and not keep.all():
+        mask = pa.array(keep)
+        cols = [c.filter(mask) for c in cols]
+        rid = rid.filter(mask) if rid is not None else None
+    return pa.Table.from_arrays(cols, names=fields), rid
 
-    Two deliberate differences, both invisible to any declared result:
-    rows are emitted ordered by row id instead of by ``repr`` of the
-    canonical key (deterministic either way; every consumer aggregates
-    or sorts), and rows reach the JVM as Arrow batches cast to the
-    source's ``to_arrow_schema`` types instead of per-row Python
-    converter calls — the guide-§4 point of the kernel."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from data_lake_demo_spark.tableformat import _unpack_dv
+def _read_side(entries, fields, types, with_rid, rng):
+    """One side (adds or removes) of a change partition: its files'
+    ``_read_file`` tables and row ids, concatenated in entry order."""
+    parts = [
+        _read_file(p, fields, types, dv, base, with_rid, rng)
+        for p, dv, base in entries
+    ]
+    if not parts:
+        tbl = pa.Table.from_arrays([pa.nulls(0, t) for t in types], names=fields)
+        return tbl, (pa.array([], pa.int64()) if with_rid else None)
+    tbl = pa.concat_tables([t for t, _ in parts])
+    rid = pa.concat_arrays([r for _, r in parts]) if with_rid else None
+    return tbl, rid
 
-    target = to_arrow_schema(spark_schema)
 
-    rng = part.rid_range
+def _nested_key(v):
+    """Canonical hashable form of one nested value: NaN equals NaN,
+    −0.0 equals +0.0, null (None) differs from NaN, struct fields are
+    matched by name, and list and map entries keep their order."""
+    if isinstance(v, float):
+        return ("__nan",) if v != v else v + 0.0
+    if isinstance(v, (list, tuple)):
+        return ("__l", tuple(_nested_key(x) for x in v))
+    if isinstance(v, dict):
+        return ("__d", tuple(sorted((k, _nested_key(x)) for k, x in v.items())))
+    return v
 
-    def load_side(entries):
-        # -> (pa.Table over `fields`, np.int64 rids) | None (fallback)
-        tables, rid_parts, types_seen = [], [], {}
-        for path, dv, base in entries:
-            if rng is not None:
-                # rid-RANGE partition: read only the row groups whose
-                # rid span can intersect [lo, hi) — the whole point of
-                # the range decomposition (see _rid_range_read)
-                scoped = _rid_range_read(path, base, rng)
-                if scoped is None:
-                    return None
-                tbl, pos, total = scoped
-                if tbl is None:
-                    continue  # every row group provably outside range
-            else:
-                tbl = pq.read_table(path)
-                total = tbl.num_rows
-                pos = np.arange(total, dtype=np.int64)
-            n = tbl.num_rows
-            names = set(tbl.column_names)
-            # stable id per PHYSICAL position (pre-mask) — the
-            # _read_parquet_rows coalesce: materialized __row_id,
-            # else manifest base + position; any null id → fallback
-            if "__row_id" in names:
-                mat = tbl.column("__row_id").combine_chunks()
-                if mat.null_count:
-                    if base is None:
-                        return None
-                    mat = pc.coalesce(mat, pa.array(base + pos))
-                    if mat.null_count:
-                        return None
-                rids = mat.to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
-                )
-            elif base is not None:
-                rids = base + pos
-            else:
-                return None
-            cols = []
-            for f in fields:
-                if f in names:
-                    c = tbl.column(f)
-                    t = c.type
-                    if not pa.types.is_null(t):
-                        types_seen.setdefault(f, set()).add(t)
-                        if not _vec_comparable(t):
-                            return None
-                    cols.append(c)
-                else:
-                    cols.append(pa.nulls(n))
-            side = pa.table(dict(zip(fields, cols))) if fields else (
-                pa.table({"__dummy": pa.nulls(n)})
-            )
-            if dv:
-                # the vector indexes physical positions in the FULL
-                # file; map through `pos` for a row-group-scoped read
-                keep_full = np.ones(total, dtype=bool)
-                skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
-                keep_full[skip[skip < total]] = False
-                keep = keep_full[pos]
-                side = side.filter(pa.array(keep))
-                rids = rids[keep]
-            if rng is not None:
-                # exact ownership: stats only bounded the row groups
-                lo, hi = rng
-                m = np.ones(rids.size, dtype=bool)
-                if lo is not None:
-                    m &= rids >= lo
-                if hi is not None:
-                    m &= rids < hi
-                if not m.all():
-                    side = side.filter(pa.array(m))
-                    rids = rids[m]
-            tables.append(side)
-            rid_parts.append(rids)
-        if not tables:
-            empty = pa.table(
-                {f: pa.nulls(0) for f in fields}
-            ) if fields else pa.table({"__dummy": pa.nulls(0)})
-            return empty, np.empty(0, dtype=np.int64), {}
-        tbl = (
-            tables[0]
-            if len(tables) == 1
-            else pa.concat_tables(tables, promote_options="permissive")
+
+def _zero(t):
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return pa.scalar("", t)
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return pa.scalar(b"", t)
+    if pa.types.is_boolean(t):
+        return pa.scalar(False, t)
+    return pa.scalar(0, t)
+
+
+def _canon(col) -> list:
+    """NULL-FREE key columns whose Arrow equality is the change feed's
+    row equality for one column: a uint8 flag (0 value, 1 null, 2 NaN)
+    plus the value with null/NaN filled by a constant the flag
+    disambiguates. Floats also map −0.0 to +0.0. A nested column
+    compares through the repr of its ``_nested_key`` form — the only
+    per-row Python in the kernels. Null-free because pyarrow 16's hash
+    grouper mis-splits groups on NULLABLE key columns once the key row
+    gets wide."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    t = col.type
+    if pa.types.is_nested(t):
+        t = pa.string()
+        col = pa.array(
+            [None if v is None else repr(_nested_key(v)) for v in col.to_pylist()],
+            type=t,
         )
-        return tbl, np.concatenate(rid_parts), types_seen
-
-    after = load_side(part.adds)
-    if after is None:
-        return None
-    before = load_side(part.removes)
-    if before is None:
-        return None
-    tbl_a, rids_a, types_a = after
-    tbl_b, rids_b, types_b = before
-    # a column read under >1 arrow type across the two sides would
-    # compare under a promoted type — reference path instead
-    for f in fields:
-        if len(types_a.get(f, set()) | types_b.get(f, set())) > 1:
-            return None
-    # bucket scoping (wide commits): in rid mode the reference keys
-    # buckets on the rid alone — replicate its crc32-of-repr exactly
-    if part.bucket is not None:
-        import zlib
-
-        i, m = part.bucket
-
-        def bmask(rids):
-            return np.fromiter(
-                (
-                    zlib.crc32(repr(int(r)).encode()) % m == i
-                    for r in rids
-                ),
-                dtype=bool,
-                count=len(rids),
-            )
-        ka, kb = bmask(rids_a), bmask(rids_b)
-        tbl_a, rids_a = tbl_a.filter(pa.array(ka)), rids_a[ka]
-        tbl_b, rids_b = tbl_b.filter(pa.array(kb)), rids_b[kb]
-    # rid uniqueness per side is the invariant the map-diff rests on
-    if np.unique(rids_a).size != rids_a.size:
-        return None
-    if np.unique(rids_b).size != rids_b.size:
-        return None
-    common, ia, ib = np.intersect1d(
-        rids_a, rids_b, assume_unique=True, return_indices=True
+    isnull = pc.cast(pc.is_null(col), pa.uint8())
+    if not pa.types.is_floating(t):
+        return [isnull, pc.fill_null(col, _zero(t))]
+    isnan = pc.fill_null(pc.is_nan(col), False)
+    flag = pc.add(
+        isnull, pc.multiply(pc.cast(isnan, pa.uint8()), pa.scalar(2, pa.uint8()))
     )
-    changed = np.zeros(common.size, dtype=bool)
-    if common.size:
-        ia_pa, ib_pa = pa.array(ia), pa.array(ib)
-        for f in fields:
-            if changed.all():
-                break
-            a = tbl_a.column(f).combine_chunks().take(ia_pa)
-            b = tbl_b.column(f).combine_chunks().take(ib_pa)
-            a_null, b_null = pc.is_null(a), pc.is_null(b)
-            if pa.types.is_null(a.type) and pa.types.is_null(b.type):
-                continue  # column absent on both sides: all equal
-            if pa.types.is_null(a.type) or pa.types.is_null(b.type):
-                # one side entirely null: equal exactly where the
-                # other side is null too
-                eq = pc.and_(a_null, b_null)
-                changed |= ~eq.to_numpy(zero_copy_only=False)
-                continue
-            eq = pc.fill_null(pc.equal(a, b), False)
-            eq = pc.or_(eq, pc.and_(a_null, b_null))
-            if pa.types.is_floating(a.type):
-                # NaN == NaN (the reference key() sentinel); note
-                # null stays != NaN through the is_null distinction
-                eq = pc.or_(
-                    eq,
-                    pc.and_(
-                        pc.fill_null(pc.is_nan(a), False),
-                        pc.fill_null(pc.is_nan(b), False),
-                    ),
-                )
-            changed |= ~eq.to_numpy(zero_copy_only=False)
-    only_a = np.ones(rids_a.size, dtype=bool)
-    only_a[ia] = False
-    only_b = np.ones(rids_b.size, dtype=bool)
-    only_b[ib] = False
-    ins_idx = np.concatenate([np.flatnonzero(only_a), ia[changed]])
-    del_idx = np.concatenate([np.flatnonzero(only_b), ib[changed]])
-    n_new = int(only_a.sum())  # prefix of ins_idx = true inserts
-    n_gone = int(only_b.sum())
-    is_update = part.op == "update"
-
-    def labels(n_total, n_plain, plain, image):
-        if is_update:
-            return np.full(n_total, image)
-        out = np.full(n_total, plain, dtype=object)
-        if as_images:
-            out[n_plain:] = image
-        return out
-
-    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
-
-    def side_table(src, rids, idx, lbls):
-        order = np.argsort(rids[idx], kind="stable")
-        idx = idx[order]
-        lbls = np.asarray(lbls, dtype=object)[order]
-        take = pa.array(idx)
-        n = idx.size
-        arrays = [
-            src.column(f).combine_chunks().take(take) for f in fields
-        ]
-        arrays.append(pa.array(lbls, type=pa.string()))
-        arrays.append(pa.array(np.full(n, part.version, dtype=np.int64)))
-        ts_tt = target.field(len(fields) + 2).type
-        ts_one = pa.array([commit_ts], type=ts_tt)
-        arrays.append(ts_one.take(pa.array(np.zeros(n, dtype=np.int32))))
-        if with_rid:
-            arrays.append(pa.array(rids[idx]))
-        casted = []
-        for arr, fld in zip(arrays, target):
-            if arr.type != fld.type:
-                if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
-                    fld.type
-                ) and (arr.type.tz is None) != (fld.type.tz is None):
-                    # naive↔aware reinterpretation differs from the
-                    # Python converter's session-tz semantics
-                    raise ValueError("timestamp tz mismatch")
-                arr = arr.cast(fld.type)
-            casted.append(arr)
-        return pa.Table.from_arrays(casted, schema=target)
-
-    ins = side_table(
-        tbl_a, rids_a, ins_idx,
-        labels(ins_idx.size, n_new, "insert", "update_postimage"),
-    )
-    dels = side_table(
-        tbl_b, rids_b, del_idx,
-        labels(del_idx.size, n_gone, "delete", "update_preimage"),
-    )
-    out = pa.concat_tables([ins, dels])
-    return out.to_batches(max_chunksize=1 << 16)
+    val = pc.fill_null(pc.if_else(isnan, pa.scalar(0.0, t), col), pa.scalar(0.0, t))
+    return [flag, pc.add(val, pa.scalar(0.0, t))]  # IEEE: -0.0 + 0.0 = +0.0
 
 
-#: once-per-process marker for vectorized-kernel fallbacks caused by an
-#: EXCEPTION (r11 advice: a kernel that starts raising — e.g. a pyarrow
-#: upgrade — must not become an invisible 10x regression; planned
-#: precondition misses returning None stay silent by design)
-_FALLBACK_WARNED = False
+def _side_keys(side) -> list:
+    """Canonical key columns of a side's rows: every field, then the
+    row id when it was read (the oracle's key is (content, id))."""
+    tbl, rid = side
+    cols = tbl.columns + ([rid] if rid is not None else [])
+    return [k for c in cols for k in _canon(c)]
 
 
-def _warn_fallback(kind: str, exc: Exception) -> None:
-    global _FALLBACK_WARNED
-    if _FALLBACK_WARNED:
-        return
-    _FALLBACK_WARNED = True
-    import sys
+def _key_hash(keys: list) -> np.ndarray:
+    """uint64 hash per row of null-free key columns, identical in every
+    process (pandas' fixed-key hashing; no PYTHONHASHSEED), so all
+    bucket tasks of a commit agree on which bucket owns a row."""
+    import pandas as pd
 
-    print(
-        f"acidtable: vectorized {kind} kernel raised "
-        f"{type(exc).__name__}: {exc} — falling back to the "
-        "row-at-a-time reference path (results identical, slower); "
-        "further fallbacks in this worker are not logged",
-        file=sys.stderr,
-    )
-
-
-def _plain_change_batches(part: _ChangePartition, fields: list[str], spark_schema):
-    """Vectorized (Arrow + numpy) twin of ``_read_change_rows`` for
-    PLAIN mode (no row ids read — untracked tables): returns
-    ``pyarrow.RecordBatch`` list, or None to fall back. r11 shipped
-    the rid-keyed kernel; this closes the remaining §4 row loop
-    (r12 verdict item 5).
-
-    The reference multiset diff groups rows by a canonical content
-    key under Python ``==``/``hash`` — replicated here exactly with
-    one Arrow hash-aggregation over both sides at once:
-
-    * float columns split into (is-NaN flag, value with NaN→0.0 and
-      −0.0→+0.0): all NaNs equal each other (the reference sentinel),
-      −0.0 equals +0.0 (Python ``==``), null stays null and equals
-      only null — the `-0.0`/NaN edge cases called out in the r11
-      design note, each pinned by a test;
-    * every other allowlisted type compares exactly under one arrow
-      type per column (a cross-side type mismatch — int file vs
-      widened float file mid-evolution — falls back, same rule as the
-      rid kernel, because promoted compare is lossy above 2^53);
-    * per-side counts and first/last positions ride the same
-      aggregation: net count > 0 emits the AFTER side's LAST
-      occurrence (the reference ``originals`` dict is last-wins) that
-      many times as inserts, net < 0 symmetrically as deletes.
-
-    Two deliberate differences, the same two the rid kernel declared:
-    rows are emitted ordered by the canonical key columns instead of
-    by ``repr`` of the key tuple (deterministic either way — building
-    the repr strings would reintroduce a per-row Python loop), and
-    rows reach the JVM as Arrow batches. Bucketed partitions
-    (``changeDiffBuckets`` on an untracked table) fall back: the
-    bucket function is crc32-of-repr over the whole key, inherently
-    row-at-a-time, and ALL buckets of a commit must bucket
-    identically or rows would be dropped/duplicated across tasks."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from data_lake_demo_spark.tableformat import _unpack_dv
-
-    if part.bucket is not None or part.rid_range is not None or not fields:
-        # rid_range partitions are planned only in rid-reading modes,
-        # which dispatch to _rid_change_batches; guard anyway — the
-        # reference path scopes them correctly
-        return None
-    target = to_arrow_schema(spark_schema)
-
-    def load_side(entries):
-        tables, types_seen = [], {}
-        for path, dv, _base in entries:
-            tbl = pq.read_table(path)
-            n = tbl.num_rows
-            names = set(tbl.column_names)
-            cols = []
-            for f in fields:
-                if f in names:
-                    c = tbl.column(f)
-                    t = c.type
-                    if not pa.types.is_null(t):
-                        types_seen.setdefault(f, set()).add(t)
-                        if not _vec_comparable(t):
-                            return None
-                    cols.append(c)
-                else:
-                    cols.append(pa.nulls(n))
-            side = pa.table(dict(zip(fields, cols)))
-            if dv:
-                keep = np.ones(n, dtype=bool)
-                skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
-                keep[skip[skip < n]] = False
-                side = side.filter(pa.array(keep))
-            tables.append(side)
-        if not tables:
-            return pa.table({f: pa.nulls(0) for f in fields}), {}
-        tbl = (
-            tables[0]
-            if len(tables) == 1
-            else pa.concat_tables(tables, promote_options="permissive")
+    h = np.zeros(len(keys[0]), dtype=np.uint64)
+    for k in keys:
+        if pa.types.is_decimal(k.type):
+            k = k.cast(pa.string())
+        h = h * np.uint64(0x100000001B3) ^ pd.util.hash_array(
+            k.to_numpy(zero_copy_only=False)
         )
-        return tbl, types_seen
+    return h
 
-    after = load_side(part.adds)
-    if after is None:
-        return None
-    before = load_side(part.removes)
-    if before is None:
-        return None
-    tbl_a, types_a = after
-    tbl_b, types_b = before
-    common = {}
-    for f in fields:
-        ts = types_a.get(f, set()) | types_b.get(f, set())
-        if len(ts) > 1:
-            return None
-        common[f] = next(iter(ts)) if ts else None
 
-    def norm(tbl):
-        # a side whose files all predate a column reads it null-typed;
-        # cast to the other side's type (all-null cast is exact) so
-        # the cross-side grouping and the final take/cast line up
-        cols = []
-        for f in fields:
-            c = tbl.column(f).combine_chunks()
-            if common[f] is not None and pa.types.is_null(c.type):
-                c = c.cast(common[f])
-            cols.append(c)
-        return pa.table(dict(zip(fields, cols)))
+def _bucket_scope(side, bucket: tuple[int, int]):
+    """The rows of ``side`` that bucket ``i`` of ``m`` owns. Rows with a
+    row id bucket by the id alone, so an update's delete+insert pair —
+    different content, same id — lands in one bucket and image pairing
+    survives; any other row buckets by its whole canonical key, so
+    rows that cancel always meet."""
+    i, m = bucket
+    tbl, rid = side
+    h = None
+    if rid is not None:
+        h = _key_hash([pc.fill_null(rid, 0)])
+    if rid is None or rid.null_count:
+        by_key = _key_hash(_side_keys(side))
+        h = by_key if h is None else np.where(
+            pc.is_valid(rid).to_numpy(zero_copy_only=False), h, by_key
+        )
+    keep = pa.array(h % np.uint64(m) == np.uint64(i))
+    return tbl.filter(keep), (rid.filter(keep) if rid is not None else None)
 
-    tbl_a, tbl_b = norm(tbl_a), norm(tbl_b)
 
-    def _fill_zero(t):
-        if pa.types.is_string(t) or pa.types.is_large_string(t):
-            return pa.scalar("", t)
-        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            return pa.scalar(b"", t)
-        if pa.types.is_boolean(t):
-            return pa.scalar(False, t)
-        return pa.scalar(0, t)
-
-    def canon_columns(tbl):
-        """NULL-FREE key columns whose arrow equality == the reference
-        key()'s Python equality. pyarrow 16's hash grouper mis-splits
-        groups on NULLABLE key columns once the key row gets wide
-        (reproduced: identical printed keys land in several groups),
-        so validity is encoded EXPLICITLY — a uint8 flag per column
-        (0 value, 1 null, 2 NaN) plus the value with null/NaN filled
-        by a type-constant the flag disambiguates. Floats additionally
-        normalize -0.0 → +0.0 (Python == treats them equal)."""
-        out = []
-        for f in fields:
-            c = tbl.column(f).combine_chunks()
-            if pa.types.is_null(c.type):
-                continue  # all-null on BOTH sides: constant key, no-op
-            isnull = pc.cast(pc.is_null(c), pa.uint8())
-            if pa.types.is_floating(c.type):
-                isnan = pc.fill_null(pc.is_nan(c), False)
-                flag = pc.add(
-                    isnull,
-                    pc.multiply(pc.cast(isnan, pa.uint8()), pa.scalar(2, pa.uint8())),
-                )
-                val = pc.if_else(isnan, pa.scalar(0.0, c.type), c)
-                val = pc.fill_null(val, pa.scalar(0.0, c.type))
-                # IEEE: -0.0 + 0.0 = +0.0
-                val = pc.add(val, pa.scalar(0.0, c.type))
-                out += [flag, val]
-            else:
-                out += [isnull, pc.fill_null(c, _fill_zero(c.type))]
-        return out
-
-    na, nb = tbl_a.num_rows, tbl_b.num_rows
-    keys_a, keys_b = canon_columns(tbl_a), canon_columns(tbl_b)
-    if not keys_a:  # every column all-null on both sides: degenerate
-        return None
-    key_names = [f"__k{i}" for i in range(len(keys_a))]
+def _content_diff(after, before):
+    """Plain-mode diff: the multiset difference of the two sides' rows
+    under canonical-key equality, as ``(insert indices into after,
+    delete indices into before)``. One Arrow hash aggregation over
+    both sides groups equal keys; a group's net count > 0 emits the
+    AFTER side's last occurrence that many times as inserts (the
+    oracle's originals are last-wins), net < 0 symmetrically as
+    deletes. A column that is all null on both sides is a constant key
+    column like any other. Output is ordered by the canonical key."""
+    keys_a, keys_b = _side_keys(after), _side_keys(before)
+    na, nb = after[0].num_rows, before[0].num_rows
+    names = [f"__k{i}" for i in range(len(keys_a))]
     combo = {
-        nm: pa.chunked_array([ca, cb])
-        for nm, ca, cb in zip(key_names, keys_a, keys_b)
+        nm: pa.chunked_array([ka, kb], type=ka.type)
+        for nm, ka, kb in zip(names, keys_a, keys_b)
     }
     combo["__cnt"] = pa.chunked_array(
         [np.ones(na, dtype=np.int64), np.full(nb, -1, dtype=np.int64)]
@@ -918,192 +479,161 @@ def _plain_change_batches(part: _ChangePartition, fields: list[str], spark_schem
     combo["__pb"] = pa.chunked_array(
         [np.full(na, -1, dtype=np.int64), np.arange(nb, dtype=np.int64)]
     )
-    g = pa.TableGroupBy(pa.table(combo), key_names).aggregate(
+    g = pa.TableGroupBy(pa.table(combo), names).aggregate(
         [("__cnt", "sum"), ("__pa", "max"), ("__pb", "max")]
     )
-    # deterministic output order: the canonical key columns (the
-    # reference sorts by repr of the key tuple — same determinism,
-    # different collation; documented above)
-    g = g.sort_by([(k, "ascending") for k in key_names])
+    g = g.sort_by([(k, "ascending") for k in names])
     cnt = g.column("__cnt_sum").to_numpy(zero_copy_only=False)
     pa_last = g.column("__pa_max").to_numpy(zero_copy_only=False)
     pb_last = g.column("__pb_max").to_numpy(zero_copy_only=False)
-    ins_mask, del_mask = cnt > 0, cnt < 0
-    ins_idx = np.repeat(pa_last[ins_mask], cnt[ins_mask])
-    del_idx = np.repeat(pb_last[del_mask], -cnt[del_mask])
+    ins, dels = cnt > 0, cnt < 0
+    return np.repeat(pa_last[ins], cnt[ins]), np.repeat(pb_last[dels], -cnt[dels])
 
+
+def _rid_diff(after, before):
+    """Row-id-mode diff as ``(insert indices into after, delete indices
+    into before)``, ordered by row id.
+
+    Stable row ids are unique among the live rows of a snapshot, so
+    every multiset count of the oracle's (content, id) key is 1 and
+    the diff is a map diff keyed by id:
+
+    * id on both sides, content equal    → cancels (not emitted)
+    * id on both sides, content differs  → delete + insert pair
+    * id only after / only before        → insert / delete
+
+    Content equality compares ``_canon`` key columns, so it follows the
+    same rules as the content diff. A side holding a null id (a file
+    that predates row tracking and has no manifest base) or a
+    duplicate id runs ``_content_diff`` with the id as one more key
+    column — exact too, because that is the oracle's key."""
+    (tbl_a, rid_a), (tbl_b, rid_b) = after, before
+    if rid_a.null_count or rid_b.null_count:
+        return _content_diff(after, before)
+    ra = rid_a.to_numpy(zero_copy_only=False)
+    rb = rid_b.to_numpy(zero_copy_only=False)
+    if np.unique(ra).size != ra.size or np.unique(rb).size != rb.size:
+        return _content_diff(after, before)
+    common, ia, ib = np.intersect1d(ra, rb, assume_unique=True, return_indices=True)
+    changed = np.zeros(common.size, dtype=bool)
+    if common.size:
+        ta, tb = tbl_a.take(pa.array(ia)), tbl_b.take(pa.array(ib))
+        for ca, cb in zip(ta.columns, tb.columns):
+            if changed.all():
+                break
+            for ka, kb in zip(_canon(ca), _canon(cb)):
+                changed |= ~pc.equal(ka, kb).to_numpy(zero_copy_only=False)
+    only_a = np.ones(ra.size, dtype=bool)
+    only_a[ia] = False
+    only_b = np.ones(rb.size, dtype=bool)
+    only_b[ib] = False
+    ins = np.concatenate([np.flatnonzero(only_a), ia[changed]])
+    dels = np.concatenate([np.flatnonzero(only_b), ib[changed]])
+    return (
+        ins[np.argsort(ra[ins], kind="stable")],
+        dels[np.argsort(rb[dels], kind="stable")],
+    )
+
+
+def _emit(side, idx, label, image, paired, part, with_rid, target):
+    """Output rows ``idx`` of a side: data columns, ``_change_type``
+    (``image`` where ``paired``, else ``label``), commit version and
+    timestamp, then the row id when requested."""
+    tbl, rid = side
+    take = pa.array(idx, type=pa.int64())
+    n = len(idx)
+    cols = [c.take(take) for c in tbl.columns]
+    lbl = pa.repeat(pa.scalar(label), n)
+    if paired is not None:
+        lbl = pc.if_else(paired, image, lbl)
+    ts_type = target.field(len(cols) + 2).type
+    cols += [
+        lbl,
+        pa.repeat(pa.scalar(part.version, pa.int64()), n),
+        pa.repeat(
+            pa.scalar(datetime.fromtimestamp(part.ts, tz=timezone.utc), ts_type), n
+        ),
+    ]
+    if with_rid:
+        cols.append(rid.take(take))
+    return pa.Table.from_arrays(cols, schema=target)
+
+
+def _change_batches(
+    part: _ChangePartition,
+    fields: list[str],
+    with_rid: bool,
+    as_images: bool,
+    target,
+) -> list:
+    """Executor-side net row diff for one commit (CDF mode), as Arrow
+    RecordBatches in the source's output schema ``target``.
+
+    Rows present after-but-not-before are inserts, before-but-not-after
+    are deletes — multiset semantics, so duplicate rows diff correctly,
+    and a pure-layout commit (compact / zorder) diffs to an EMPTY feed,
+    matching ``AcidTable.changes``. Memory is O(files this commit
+    touched); ``bucket`` / ``rid_range`` partitions scope a wide commit
+    to a deterministic share of its rows.
+
+    Plain mode runs ``_content_diff``. The rid-reading modes
+    (``withRowIds`` / ``updateAsImages``) run ``_rid_diff``: because
+    rewrites PRESERVE ids, carried rows still cancel, layout commits
+    still diff to empty, and an update's delete+insert pair SHARES its
+    id. ``as_images`` folds that pairing into Delta's 4-value enum: a
+    delete and an insert sharing a row id within one commit relabel to
+    ``update_preimage``/``update_postimage``. An ``update()`` commit's
+    net diff is exactly the updated rows, so all its rows carry image
+    labels in every mode — labeling rides the commit operation, the way
+    Delta derives CDF types from the command."""
+    read_rid = with_rid or as_images
+    types = target.types[: len(fields)]
+    after = _read_side(part.adds, fields, types, read_rid, part.rid_range)
+    before = _read_side(part.removes, fields, types, read_rid, part.rid_range)
+    if part.bucket is not None:
+        after = _bucket_scope(after, part.bucket)
+        before = _bucket_scope(before, part.bucket)
+    ins, dels = (_rid_diff if read_rid else _content_diff)(after, before)
     is_update = part.op == "update"
-    ins_label = "update_postimage" if is_update else "insert"
-    del_label = "update_preimage" if is_update else "delete"
-    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
-
-    def side_table(src, idx, label):
-        take = pa.array(idx)
-        n = idx.size
-        arrays = [
-            src.column(f).combine_chunks().take(take) for f in fields
-        ]
-        zeros = pa.array(np.zeros(n, dtype=np.int32))
-        arrays.append(pa.array([label], type=pa.string()).take(zeros))
-        arrays.append(pa.array(np.full(n, part.version, dtype=np.int64)))
-        ts_tt = target.field(len(fields) + 2).type
-        ts_one = pa.array([commit_ts], type=ts_tt)
-        arrays.append(ts_one.take(pa.array(np.zeros(n, dtype=np.int32))))
-        casted = []
-        for arr, fld in zip(arrays, target):
-            if arr.type != fld.type:
-                if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
-                    fld.type
-                ) and (arr.type.tz is None) != (fld.type.tz is None):
-                    # naive↔aware reinterpretation differs from the
-                    # Python converter's session-tz semantics
-                    raise ValueError("timestamp tz mismatch")
-                arr = arr.cast(fld.type)
-            casted.append(arr)
-        return pa.Table.from_arrays(casted, schema=target)
-
+    ins_paired = del_paired = None
+    if as_images and not is_update:
+        ins_rid = after[1].take(pa.array(ins, type=pa.int64()))
+        del_rid = before[1].take(pa.array(dels, type=pa.int64()))
+        ins_paired = pc.is_in(ins_rid, value_set=del_rid.drop_null())
+        del_paired = pc.is_in(del_rid, value_set=ins_rid.drop_null())
     out = pa.concat_tables(
         [
-            side_table(tbl_a, ins_idx, ins_label),
-            side_table(tbl_b, del_idx, del_label),
+            _emit(
+                after, ins, "update_postimage" if is_update else "insert",
+                "update_postimage", ins_paired, part, with_rid, target,
+            ),
+            _emit(
+                before, dels, "update_preimage" if is_update else "delete",
+                "update_preimage", del_paired, part, with_rid, target,
+            ),
         ]
     )
     return out.to_batches(max_chunksize=1 << 16)
 
 
-def _change_batches_or_rows(
-    part: _ChangePartition,
-    fields: list[str],
-    with_rid: bool,
-    as_images: bool,
-    spark_schema,
-    vectorized: bool = True,
-):
-    """Dispatch: the vectorized diff — rid-keyed in the rid-reading
-    modes, content-keyed in plain mode — when its preconditions hold,
-    else the row-at-a-time reference path (identical output rows
-    either way; order and transport differ as documented).
-    ``vectorized`` is the reader's ``vectorizedRead`` option — a
-    per-read kill switch that travels WITH the pickled reader into
-    the Python worker (a module flag would not: workers import this
-    module fresh), which is also what lets tests compare both paths
-    through a real Spark plan."""
-    if vectorized and spark_schema is not None:
-        try:
-            if with_rid or as_images:
-                batches = _rid_change_batches(
-                    part, fields, with_rid, as_images, spark_schema
-                )
-            else:
-                batches = _plain_change_batches(part, fields, spark_schema)
-        except Exception as e:  # any arrow surprise → reference path
-            _warn_fallback("CDF diff", e)
-            batches = None
-        if batches is not None:
-            return iter(batches)
-    return _read_change_rows(part, fields, with_rid, as_images)
-
-
-def _file_record_batches(
-    path: str,
-    fields: list[str],
-    dv: str | None,
-    rid_base: int | None,
-    with_rid: bool,
-    spark_schema,
-):
-    """Vectorized twin of ``_read_parquet_rows`` for snapshot /
-    append-stream partitions: the whole file becomes Arrow
-    RecordBatches cast to the source's output schema — zero per-row
-    Python. Unlike the diff kernel this path never reorders (file
-    order in = file order out, exactly the reference), and a null row
-    id is simply emitted as null (no uniqueness requirement). Returns
-    None to fall back when a column's type is outside the scalar
-    allowlist or a cast would reinterpret (naive↔aware timestamps) —
-    value semantics through arrow are only certified for the scalar
-    types the diff kernel already vets."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from data_lake_demo_spark.tableformat import _unpack_dv
-
-    target = to_arrow_schema(spark_schema)
-    tbl = pq.read_table(path)
-    n = tbl.num_rows
-    names = set(tbl.column_names)
-    arrays = []
-    for f in fields:
-        if f in names:
-            c = tbl.column(f)
-            if not pa.types.is_null(c.type) and not _vec_comparable(c.type):
-                return None
-            arrays.append(c)
-        else:
-            arrays.append(pa.nulls(n))
-    if with_rid:
-        # the _read_parquet_rows coalesce: materialized __row_id,
-        # else manifest base + physical position, else null
-        if "__row_id" in names:
-            rid = tbl.column("__row_id").combine_chunks()
-            if rid.null_count and rid_base is not None:
-                rid = pc.coalesce(
-                    rid,
-                    pa.array(np.arange(rid_base, rid_base + n, dtype=np.int64)),
-                )
-        elif rid_base is not None:
-            rid = pa.array(np.arange(rid_base, rid_base + n, dtype=np.int64))
-        else:
-            rid = pa.nulls(n, type=pa.int64())
-        arrays.append(rid)
-    if dv:
-        keep = np.ones(n, dtype=bool)
-        skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
-        keep[skip[skip < n]] = False
-        mask = pa.array(keep)
-        arrays = [
-            a.filter(mask) if not isinstance(a, pa.ChunkedArray)
-            else a.combine_chunks().filter(mask)
-            for a in arrays
-        ]
-    casted = []
-    for arr, fld in zip(arrays, target):
-        if arr.type != fld.type:
-            if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
-                fld.type
-            ) and (arr.type.tz is None) != (fld.type.tz is None):
-                return None  # converter semantics differ: fall back
-            arr = arr.cast(fld.type)
-        casted.append(arr)
-    return pa.Table.from_arrays(casted, schema=target).to_batches(
-        max_chunksize=1 << 16
+def _file_batches(part: _FilePartition, fields, with_rid: bool, target) -> list:
+    """Snapshot / append-stream partition: the file's live rows in file
+    order as Arrow RecordBatches in the output schema (a row id with no
+    derivation is emitted as null)."""
+    tbl, rid = _read_file(
+        part.path, fields, target.types[: len(fields)], part.dv, part.base, with_rid
     )
+    cols = tbl.columns + ([rid] if with_rid else [])
+    return pa.Table.from_arrays(cols, schema=target).to_batches(max_chunksize=1 << 16)
 
 
-def _file_batches_or_rows(
-    path: str,
-    fields: list[str],
-    dv: str | None,
-    rid_base: int | None,
-    with_rid: bool,
-    spark_schema,
-    vectorized: bool = True,
-):
-    """Dispatch for file partitions: Arrow batches when possible, the
-    row-at-a-time reference path otherwise (same rows, same order)."""
-    if vectorized and spark_schema is not None:
-        try:
-            batches = _file_record_batches(
-                path, fields, dv, rid_base, with_rid, spark_schema
-            )
-        except Exception as e:
-            _warn_fallback("file read", e)
-            batches = None
-        if batches is not None:
-            return iter(batches)
-    return _read_parquet_rows(path, fields, dv, rid_base, with_rid)
+def _read_partition(part, fields, with_rid: bool, as_images: bool, target):
+    """Executor entry point shared by the batch and stream readers."""
+    if isinstance(part, _ChangePartition):
+        return iter(_change_batches(part, fields, with_rid, as_images, target))
+    if not part.path:
+        return iter(())
+    return iter(_file_batches(part, fields, with_rid, target))
 
 
 def _row_id_base(stats: dict | None) -> int | None:
@@ -1113,51 +643,41 @@ def _row_id_base(stats: dict | None) -> int | None:
 
 def _rid_file_intervals(entries) -> list | None:
     """Plan-time rid span ``(lo, hi, rows)`` per touched file, or None
-    when any file's span is unknowable — ``base + [0, #rows)`` from
-    the manifest when the commit log proves the derivation, else the
-    parquet footer's ``__row_id`` min/max (a KB-sized metadata read
-    per file, paid only for commits wide enough to split). Mirrors
-    ``_rid_range_read``'s executor-side rules, including the null
-    widening."""
-    import pyarrow.parquet as pq
-
+    when any file's span is unknowable from its statistics —
+    ``base + [0, #rows)`` from the manifest when the commit log proves
+    the derivation, else the parquet footer's ``__row_id`` min/max (a
+    KB-sized metadata read per file, paid only for commits wide enough
+    to split). Mirrors ``_rid_range_read``'s executor-side rules,
+    including the null widening; a footer that cannot be read raises."""
     out = []
     for path, _dv, base in entries:
-        n_rows = None
-        try:
-            md = pq.ParquetFile(path).metadata
-            names = [
-                md.schema.column(i).name for i in range(md.num_columns)
-            ]
-            n_rows = md.num_rows
-            if n_rows == 0:
-                continue
-            if "__row_id" not in names:
-                if base is None:
-                    return None
-                out.append((base, base + n_rows, n_rows))
-                continue
-            idx = names.index("__row_id")
-            lo = hi = None
-            nulls = 0
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                nulls += (
-                    st.null_count if st.has_null_count else md.num_rows
-                )
-                glo, ghi = int(st.min), int(st.max) + 1
-                lo = glo if lo is None else min(lo, glo)
-                hi = ghi if hi is None else max(hi, ghi)
-            if nulls:
-                if base is None:
-                    return None
-                lo = min(lo, base)
-                hi = max(hi, base + n_rows)
-            out.append((lo, hi, n_rows))
-        except Exception:
-            return None
+        md = pq.ParquetFile(path).metadata
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        n_rows = md.num_rows
+        if n_rows == 0:
+            continue
+        if "__row_id" not in names:
+            if base is None:
+                return None
+            out.append((base, base + n_rows, n_rows))
+            continue
+        idx = names.index("__row_id")
+        lo = hi = None
+        nulls = 0
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(idx).statistics
+            if st is None or not st.has_min_max:
+                return None
+            nulls += st.null_count if st.has_null_count else md.num_rows
+            glo, ghi = int(st.min), int(st.max) + 1
+            lo = glo if lo is None else min(lo, glo)
+            hi = ghi if hi is None else max(hi, ghi)
+        if nulls:
+            if base is None:
+                return None
+            lo = min(lo, base)
+            hi = max(hi, base + n_rows)
+        out.append((lo, hi, n_rows))
     return out
 
 
@@ -1324,17 +844,6 @@ def _rid_enabled(options) -> bool:
     return str(options.get("withrowids", "false")).lower() in ("true", "1")
 
 
-def _vectorized_read(options) -> bool:
-    """``vectorizedRead=false``: per-read kill switch forcing the
-    row-at-a-time reference paths (identical rows, slower) for both
-    executor kernels — the CDF diff and the file/snapshot read. The
-    knob equivalence tests and A/B measurements flip."""
-    return str(options.get("vectorizedread", "true")).lower() in (
-        "true",
-        "1",
-    )
-
-
 def _images_enabled(options) -> bool:
     """``updateAsImages=true`` (CDF mode, row-tracking tables): fold
     id-paired delete+insert rows into Delta's 4-value enum —
@@ -1356,9 +865,9 @@ AUTO_DIFF_MAX_BUCKETS = 32
 
 def _diff_buckets(options, cdf: bool) -> int:
     """``changeDiffBuckets=m`` (CDF mode): decompose each change
-    commit's diff into m deterministic row-hash buckets — m-way task
-    parallelism and 1/m per-task memory for wide commits, at m× read
-    amplification of the commit's touched files.
+    commit's diff into m deterministic shares — row-id ranges or
+    row-hash buckets, see ``_cdf_partitions`` — for m-way task
+    parallelism and 1/m per-task memory on wide commits.
 
     Default ``auto`` (r11): 0 is returned as a sentinel and
     ``_cdf_partitions`` derives m PER COMMIT from the manifest row
@@ -1369,9 +878,9 @@ def _diff_buckets(options, cdf: bool) -> int:
     splits, while ordinary manifest-pruned CDC commits keep the
     single-task bounded diff and pay zero read amplification. Files
     missing ``#rows`` stats count 0 rows, so the failure mode is the
-    old single-task behavior. The decomposition is row-hash
-    deterministic and equality-tested against the single-task diff
-    across plain/images/row-id modes (test_streaming)."""
+    old single-task behavior. The union of a commit's shares is
+    equality-tested against the single-task diff across
+    plain/images/row-id modes (test_streaming)."""
     raw = str(options.get("changediffbuckets", "auto")).lower()
     if raw == "auto":
         return 0 if cdf else 1
@@ -1421,8 +930,6 @@ def _catalog_lookup(root: str, name: str) -> str:
     ``<root>/_catalog`` WITHOUT a SparkSession: the planner reads the
     registry's live parquet files with pyarrow (registry rows are
     unique per name — registrations MERGE on table_name)."""
-    import pyarrow.parquet as pq
-
     from data_lake_demo_spark.tableformat import AcidTable
 
     store = AcidTable(None, os.path.join(_local_path(root), "_catalog"))
@@ -1518,21 +1025,20 @@ def _reverse_colmap(options, pinned: bool = False) -> dict:
     only, no SparkSession. ``pinned`` resolves the map as of the
     versionAsOf/timestampAsOf option (time travel shows each
     version's own column names)."""
-    try:
-        t = _table(options)
-        as_of = _as_of_version(t, options) if pinned else None
-        colmap = t._colmap(as_of)
-    except Exception:
+    t = _table(options)
+    if t.latest_version() < 0:
         return {}
-    return {lg: ph for ph, lg in colmap.items() if lg}
+    as_of = _as_of_version(t, options) if pinned else None
+    return {lg: ph for ph, lg in t._colmap(as_of).items() if lg}
 
 
 class _AcidBatchReader(DataSourceReader):
     def __init__(self, options, schema_fields: list[str], spark_schema=None):
-        # full Spark StructType (when constructed via the DataSource):
-        # the vectorized CDF diff needs the output arrow schema
-        self._spark_schema = spark_schema
-        self._vec = _vectorized_read(options)
+        # the executor kernels emit Arrow batches in the output schema
+        # (None only for planner-only handles that never read)
+        self._target = (
+            None if spark_schema is None else to_arrow_schema(spark_schema)
+        )
         self._images = _check_images_options(options, _cdf_enabled(options))
         self._diff_buckets = _diff_buckets(options, _cdf_enabled(options))
         self._options = options
@@ -1612,23 +1118,16 @@ class _AcidBatchReader(DataSourceReader):
         return parts or [_FilePartition("")]
 
     def read(self, partition):
-        if isinstance(partition, _ChangePartition):
-            return _change_batches_or_rows(
-                partition, self._fields, self._rid, self._images,
-                self._spark_schema, self._vec,
-            )
-        if not partition.path:
-            return iter(())
-        return _file_batches_or_rows(
-            partition.path, self._fields, partition.dv,
-            partition.base, self._rid, self._spark_schema, self._vec,
+        return _read_partition(
+            partition, self._fields, self._rid, self._images, self._target
         )
 
 
 class _AcidStreamReader(DataSourceStreamReader):
     def __init__(self, options, schema_fields: list[str], spark_schema=None):
-        self._spark_schema = spark_schema
-        self._vec = _vectorized_read(options)
+        self._target = (
+            None if spark_schema is None else to_arrow_schema(spark_schema)
+        )
         self._options = options
         self._cdf = _cdf_enabled(options)
         self._rid = _rid_enabled(options)
@@ -1788,16 +1287,8 @@ class _AcidStreamReader(DataSourceStreamReader):
         return parts or [_FilePartition("")]
 
     def read(self, partition):
-        if isinstance(partition, _ChangePartition):
-            return _change_batches_or_rows(
-                partition, self._fields, self._rid, self._images,
-                self._spark_schema, self._vec,
-            )
-        if not partition.path:
-            return iter(())
-        return _file_batches_or_rows(
-            partition.path, self._fields, None, partition.base,
-            self._rid, self._spark_schema, self._vec,
+        return _read_partition(
+            partition, self._fields, self._rid, self._images, self._target
         )
 
     def commit(self, end: dict) -> None:
@@ -1836,10 +1327,6 @@ def _stage_write(
     values if a concurrent identity writer won the watermark race
     (_commit_staged_identity)."""
     import uuid
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     task_base = 0
     if identity:
@@ -2004,11 +1491,10 @@ def _writer_physical(options, schema: T.StructType) -> tuple[str, dict | None]:
     """(physical schema json, logical->physical rename map or None)
     for a write into a possibly column-mapped table. Rejects writing
     a column whose name is reserved by a renamed/dropped physical
-    column — same restriction as AcidTable._physicalize."""
-    try:
-        colmap = _table(options)._colmap()
-    except Exception:
-        colmap = {}
+    column — same restriction as AcidTable._physicalize. A table with
+    no commits yet has no mapping."""
+    t = _table(options)
+    colmap = t._colmap() if t.latest_version() >= 0 else {}
     if any(f.name == "__row_id" for f in schema.fields):
         raise ValueError(
             "column name '__row_id' is reserved for row tracking — "
@@ -2180,9 +1666,6 @@ def _commit_staged_identity(
     and repaired by SHIFTING the staged id columns with a local
     columnar pass (pure arithmetic, only this write's files) before
     retrying. The common uncontended path never rewrites anything."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     bases = {c: dict(v) for c, v in identity.items()}
     for _ in range(max_retries):
         base_v = t.latest_version()

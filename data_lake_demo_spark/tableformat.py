@@ -71,6 +71,7 @@ import time
 import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -324,6 +325,22 @@ def _dv_sidecar_rel(val: str | None) -> str | None:
         return None
     rel, _, _ = val[len(_DV_SIDECAR_PREFIX):].rpartition(":")
     return None if os.path.isabs(rel) else rel
+
+
+def _local_abspath(uri: str) -> str:
+    """Absolute local path of a file URI as Spark reports it
+    (``_metadata.file_path`` / ``input_file_name()``: ``file:`` scheme,
+    percent-encoded), or of a bare path."""
+    if uri.startswith("file:"):
+        uri = unquote(urlparse(uri).path)
+    return os.path.abspath(uri)
+
+
+def _rel_index(root: str, rels: Sequence[str]) -> dict[str, str]:
+    """{absolute path: table-relative path} for ``rels`` — maps a
+    Spark-reported file URI (via ``_local_abspath``) back to exactly
+    one of the table's files, never by a shared name suffix."""
+    return {os.path.abspath(os.path.join(root, r)): r for r in rels}
 
 
 def _dv_abs(val: str | None, root: str) -> str | None:
@@ -1376,6 +1393,7 @@ class AcidTable:
             *[os.path.join(self.path, f) for f in rel_files]
         )
         m, k = self.bloom_bits, _BLOOM_HASHES
+        rels = _rel_index(self.path, rel_files)
         for col in self.bloom_cols:
             if col not in df.columns:
                 continue
@@ -1419,11 +1437,8 @@ class AcidTable:
             )
             blocks: dict[str, dict[int, int]] = {}
             for r in rows:
-                rel = next(
-                    (f for f in rel_files if r["__f"].endswith(f)), None
-                )
-                if rel is not None:
-                    blocks.setdefault(rel, {})[r["__block"]] = r["__bits"]
+                rel = rels[_local_abspath(r["__f"])]
+                blocks.setdefault(rel, {})[r["__block"]] = r["__bits"]
             for rel, bmap in blocks.items():
                 bits = b"".join(
                     struct.pack("<q", bmap.get(b, 0)) for b in range(m // 64)
@@ -2760,12 +2775,9 @@ class AcidTable:
         scan + exchange + Python-worker + collect. Entries are
         byte-identical either way (the encode is sort-unique
         canonical)."""
-        exrefs = {
-            "file:" + os.path.abspath(os.path.join(self.path, p)):
-                _dv_abs(dvs[p], self.path)
-            for p in touched
-            if p in dvs and dvs[p]
-        }
+        # a URI Spark reports for a file outside ``touched`` is a bug:
+        # the KeyError fails the verb before anything commits
+        rels = _rel_index(self.path, touched)
         if (
             row_bound is not None
             and row_bound <= self._DV_ENCODE_DRIVER_MAX_ROWS
@@ -2775,18 +2787,22 @@ class AcidTable:
             pdf = hits.select("__fp", "__ri").toPandas()
             entries = []
             for fp, grp in pdf.groupby("__fp", sort=False):
+                rel = rels[_local_abspath(fp)]
                 idx = grp["__ri"].to_numpy(dtype="int64")
-                ref = exrefs.get(fp)
+                ref = _dv_abs(dvs.get(rel), self.path)
                 if ref:
                     idx = np.concatenate(
                         [idx, np.asarray(_unpack_dv(ref), dtype=np.int64)]
                     )
                 payload, n = _dv_encode_runs(idx)
-                rel = next((f for f in touched if fp.endswith(f)), None)
-                if rel is None:  # never expected; fail loud
-                    raise RuntimeError(f"unmapped file {fp}")
                 entries.append(self._dv_entry(rel, payload=payload, n=n))
             return sorted(entries, key=lambda e: e["path"])
+        exrefs = {
+            "file:" + os.path.abspath(os.path.join(self.path, p)):
+                _dv_abs(dvs[p], self.path)
+            for p in touched
+            if p in dvs and dvs[p]
+        }
         if exrefs:
             ref_df = self.spark.createDataFrame(
                 list(exrefs.items()), "__fp string, __exref string"
@@ -2799,16 +2815,14 @@ class AcidTable:
             )
             .collect()
         )
-        entries = []
-        for r in enc:
-            rel = next((f for f in touched if r["__fp"].endswith(f)), None)
-            if rel is None:  # never expected; fail loud
-                raise RuntimeError(f"unmapped file {r['__fp']}")
-            entries.append(
-                self._dv_entry(
-                    rel, payload=bytes(r["payload"]), n=int(r["n"])
-                )
+        entries = [
+            self._dv_entry(
+                rels[_local_abspath(r["__fp"])],
+                payload=bytes(r["payload"]),
+                n=int(r["n"]),
             )
+            for r in enc
+        ]
         return sorted(entries, key=lambda e: e["path"])
 
     def _apply_dvs(
@@ -3587,7 +3601,7 @@ class AcidTable:
         nulls. Both readers already resolve additive evolution at
         read time — ``snapshot`` widens the merged scan from the
         committed schema, and the DSv2 executor read pads columns a
-        file predates (acid_source._read_parquet_rows) — so the new
+        file predates (acid_source._read_file) — so the new
         column is immediately visible at every surface, and the next
         write may populate it. ``columns`` maps name -> Spark DDL
         type string (``{"note": "string"}``)."""

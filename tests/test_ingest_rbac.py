@@ -37,6 +37,18 @@ def lake(spark, tmp_path_factory):
     return lk
 
 
+def test_ingest_writes_one_file_per_page(lake):
+    """4 endpoints × 10 pages → 40 raw files per day: every page is its
+    own file, the reference's layout (worker.py:27-28)."""
+    import os
+
+    for d in (D1, D2):
+        for ep in ("api-a", "api-b", "api-c", "api-d"):
+            part = os.path.join(lake.raw_path, f"source={ep}", f"ingestion_date={d}")
+            files = [f for f in os.listdir(part) if f.startswith("part-")]
+            assert len(files) == 10, (d, ep, files)
+
+
 def test_smoke_grouped_counts(lake):
     # README.md:74-83: one row per (source, day), ~10 files each
     got = (

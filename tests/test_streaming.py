@@ -2484,13 +2484,11 @@ def test_vectorized_cdf_diff_matches_reference(spark, tmp_path):
     file), the update() verb (op-labeled images), and float columns
     with NaN and null on BOTH sides (NaN==NaN must cancel; null vs
     NaN must NOT) — compared across plain/images/row-id modes, with
-    and without bucket decomposition. ``vectorizedRead=false`` forces
-    the reference path; it travels with the pickled reader, so the
-    comparison exercises the worker-side kernel, not a driver flag."""
-    from data_lake_demo_spark.streaming.acid_source import (
-        _rid_change_batches,
-        register,
-    )
+    and without bucket decomposition. The reference is the
+    row-at-a-time oracle run over the same planned partitions."""
+    from acid_oracle import canon_rows, oracle_batch
+
+    from data_lake_demo_spark.streaming.acid_source import register
     from data_lake_demo_spark.tableformat import AcidTable
 
     register(spark)
@@ -2520,53 +2518,20 @@ def test_vectorized_cdf_diff_matches_reference(spark, tmp_path):
     t.delete([("k", ">", 50)], mode="merge_on_read")
     t.update({"v": "concat(v, '!')"}, [("k", "<", 5)])
 
-    def canon(row):
-        # tuple equality would never match NaN against NaN
-        return tuple(
-            "__nan" if isinstance(v, float) and v != v else v for v in row
-        )
-
-    def read(**opts):
-        r = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0 + 1)
-        )
-        for key, val in opts.items():
-            r = r.option(key, val)
-        return sorted((canon(row) for row in r.load().collect()), key=repr)
-
     for extra in (
         {"updateAsImages": "true"},
         {"withRowIds": "true"},
         {"updateAsImages": "true", "withRowIds": "true"},
         {"updateAsImages": "true", "changeDiffBuckets": "3"},
-        {},  # plain mode: both reads take the reference path
+        {},  # plain mode: the content-keyed kernel
     ):
-        got = read(**extra)
-        ref = read(vectorizedRead="false", **extra)
-        assert got == ref and got, extra
-
-    # fallback unit check: a partition whose files carry no row-id
-    # info returns None (the dispatcher then runs the reference path)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    plain = str(tmp_path / "plain.parquet")
-    pq.write_table(pa.table({"k": [1, 2]}), plain)
-    from data_lake_demo_spark.streaming.acid_source import _ChangePartition
-
-    part = _ChangePartition([(plain, None, None)], [], 1, 0.0)
-    schema = (
-        spark.read.format("acidtable")
-        .option("path", p)
-        .option("readChangeFeed", "true")
-        .option("updateAsImages", "true")
-        .load()
-        .schema
-    )
-    assert _rid_change_batches(part, ["k"], False, True, schema) is None
+        opts = {
+            "path": p, "readChangeFeed": "true", "startingVersion": v0 + 1,
+            **extra,
+        }
+        df = spark.read.format("acidtable").options(**opts).load()
+        got = canon_rows(df.collect())
+        assert got == canon_rows(oracle_batch(opts, df.schema)) and got, extra
 
 
 def test_vectorized_snapshot_read_matches_reference(spark, tmp_path):
@@ -2574,7 +2539,9 @@ def test_vectorized_snapshot_read_matches_reference(spark, tmp_path):
     partitions) emits the reference path's rows in the SAME order —
     plain and withRowIds, over deletion-vector-masked files, files
     predating an added column (null padding), and floats with
-    NaN/null. ``vectorizedRead=false`` is the reference path."""
+    NaN/null. The reference is the oracle over the same live-file plan."""
+    from acid_oracle import canon, oracle_batch
+
     from data_lake_demo_spark.streaming.acid_source import register
     from data_lake_demo_spark.tableformat import AcidTable
 
@@ -2603,22 +2570,16 @@ def test_vectorized_snapshot_read_matches_reference(spark, tmp_path):
     # deletion-vector mask on carried files
     t.delete([("k", ">", 25)], mode="merge_on_read")
 
-    def canon(row):
-        return tuple(
-            "__nan" if isinstance(v, float) and v != v else v for v in row
-        )
-
-    def read(**opts):
-        r = spark.read.format("acidtable").option("path", p)
-        for key, val in opts.items():
-            r = r.option(key, val)
-        # UNSORTED: the file kernel must preserve row order exactly
-        return [canon(row) for row in r.load().collect()]
+    def rows(rs):
+        return [tuple(canon(v) for v in r) for r in rs]
 
     for extra in ({}, {"withRowIds": "true"}):
-        got = read(**extra)
-        ref = read(vectorizedRead="false", **extra)
-        assert got == ref and len(got) == 26, extra
+        opts = {"path": p, **extra}
+        df = spark.read.format("acidtable").options(**opts).load()
+        # UNSORTED: the file kernel must preserve row order exactly
+        got = rows(df.collect())
+        assert got == rows(oracle_batch(opts, df.schema)), extra
+        assert len(got) == 26, extra
 
 
 def test_vectorized_plain_cdf_diff_matches_reference(spark, tmp_path):
@@ -2630,7 +2591,10 @@ def test_vectorized_plain_cdf_diff_matches_reference(spark, tmp_path):
     cases the r11 design note deferred: all NaNs must compare equal,
     -0.0 must equal +0.0 (Python ==), null must equal only null. Rows
     are compared by repr so a representative-row divergence on signed
-    zeros (−0.0 == 0.0 under tuple equality) cannot hide."""
+    zeros (−0.0 == 0.0 under tuple equality) cannot hide. The reference
+    is the oracle over the same planned partitions."""
+    from acid_oracle import canon_rows, oracle_batch
+
     from data_lake_demo_spark.streaming.acid_source import register
     from data_lake_demo_spark.tableformat import AcidTable
 
@@ -2662,61 +2626,21 @@ def test_vectorized_plain_cdf_diff_matches_reference(spark, tmp_path):
     t.update({"v": "concat(v, '!')"}, [("k", "=", 4)])  # op-labeled images
 
     def read(**opts):
-        r = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0 + 1)
-        )
-        for key, val in opts.items():
-            r = r.option(key, val)
-        return sorted(repr(row) for row in r.load().collect())
+        opts = {
+            "path": p, "readChangeFeed": "true", "startingVersion": v0 + 1,
+            **opts,
+        }
+        df = spark.read.format("acidtable").options(**opts).load()
+        return canon_rows(df.collect()), canon_rows(oracle_batch(opts, df.schema))
 
-    got = read()
-    ref = read(vectorizedRead="false")
+    got, ref = read()
     assert got == ref and got
     # sanity: the scenario actually exercised a multiset count > 1
-    assert any("v1" in r for r in got)
-
-    # bucketed plain partitions fall back by design (crc32-of-repr
-    # bucketing is row-at-a-time; all buckets of a commit must agree)
-    from data_lake_demo_spark.streaming.acid_source import (
-        _ChangePartition,
-        _plain_change_batches,
-    )
-
-    schema = (
-        spark.read.format("acidtable")
-        .option("path", p)
-        .option("readChangeFeed", "true")
-        .load()
-        .schema
-    )
-    part = _ChangePartition([], [], 1, 0.0, bucket=(0, 2))
-    assert _plain_change_batches(part, ["k"], schema) is None
-    # explicit buckets on an untracked table still agree end-to-end
-    got_b = read(changeDiffBuckets="2")
-    assert got_b == ref
-
-    # the kernel must actually fire on these partitions (no silent
-    # both-sides-reference comparison): every unbucketed change
-    # partition of the range returns arrow batches, and their rows
-    # are exactly the whole read
-    from data_lake_demo_spark.streaming.acid_source import _cdf_partitions
-
-    fields = [f for f in schema.fieldNames()
-              if f not in ("_change_type", "_commit_version",
-                           "_commit_timestamp")]
-    parts = _cdf_partitions(t, v0 + 1, t.latest_version() + 1)
-    diff_parts = [q for q in parts if q.removes]
-    assert diff_parts
-    n_rows = 0
-    for q in diff_parts:
-        batches = _plain_change_batches(q, fields, schema)
-        assert batches is not None, (q.version, q.op)
-        n_rows += sum(b.num_rows for b in batches)
-    # adds-only partitions (pure appends) contribute the rest
-    assert n_rows <= len(got) and n_rows > 0
+    assert sum(1 for r in got if r[:3] == (1, "v1", 2.5)) == 2
+    # explicit buckets on an untracked table: the union of each
+    # commit's buckets is the single-task diff
+    got_b, ref_b = read(changeDiffBuckets="2")
+    assert got_b == ref_b == ref
 
 
 def test_rid_range_cdf_decomposition_matches_buckets(spark, tmp_path):
@@ -2725,9 +2649,11 @@ def test_rid_range_cdf_decomposition_matches_buckets(spark, tmp_path):
     The partitions must carry rid_range (not bucket), the ranges must
     tile the id space (open ends, strictly increasing boundaries),
     and the emitted rows must equal the single-task diff and the
-    reference (vectorizedRead=false) read exactly — across plain
+    oracle over the same ranged plan exactly — across plain
     updates, MERGE rewrites (materialized __row_id files) and MOR
     deletes (deletion vectors mapped through the scoped positions)."""
+    from acid_oracle import canon_rows, oracle_batch
+
     from data_lake_demo_spark.streaming.acid_source import (
         _cdf_partitions,
         register,
@@ -2770,27 +2696,22 @@ def test_rid_range_cdf_decomposition_matches_buckets(spark, tmp_path):
         assert bs == sorted(set(bs)), (v, rngs)  # strictly increasing
 
     def read(**opts):
-        r = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0)
-        )
-        for key, val in opts.items():
-            r = r.option(key, val)
-        return sorted(repr(row) for row in r.load().collect())
+        opts = {
+            "path": p, "readChangeFeed": "true", "startingVersion": v0,
+            **opts,
+        }
+        df = spark.read.format("acidtable").options(**opts).load()
+        return canon_rows(df.collect()), canon_rows(oracle_batch(opts, df.schema))
 
     for extra in (
         {"withRowIds": "true"},
         {"updateAsImages": "true"},
         {"updateAsImages": "true", "withRowIds": "true"},
     ):
-        base = read(**extra)
-        assert base == read(changeDiffBuckets="3", **extra), extra
-        # reference fallback scopes rid ranges identically
-        assert base == read(
-            changeDiffBuckets="3", vectorizedRead="false", **extra
-        ), extra
+        base, _ = read(**extra)
+        ranged, oracle = read(changeDiffBuckets="3", **extra)
+        # the oracle scopes the same rid ranges row by row
+        assert base == ranged == oracle and base, extra
 
 
 def test_rid_range_read_skips_row_groups(spark, tmp_path):
@@ -2823,7 +2744,7 @@ def test_rid_range_read_skips_row_groups(spark, tmp_path):
     assert got == list(range(1030, 1060))  # exact filter is the caller's
 
     skip_all = _rid_range_read(path, None, (5000, None))
-    assert skip_all[0] is None and skip_all[1].size == 0
+    assert skip_all[0].num_rows == 0 and skip_all[1].size == 0
 
     # base-derived file (no __row_id column): position-window skipping
     path2 = str(tmp_path / "plain.parquet")
@@ -2832,9 +2753,408 @@ def test_rid_range_read_skips_row_groups(spark, tmp_path):
     )
     tbl2, pos2, _ = _rid_range_read(path2, 500, (None, 530))
     assert pos2.tolist() == list(range(0, 50))  # groups 0-24, 25-49
-    assert _rid_range_read(path2, None, (0, 10)) is None  # no rid story
+    with pytest.raises(ValueError, match="no manifest base"):
+        _rid_range_read(path2, None, (0, 10))  # no rid story: unprovable
 
     # unbounded-low range owns the file head
     tbl3, pos3, _ = _rid_range_read(path, None, (None, 1005))
     assert pos3.tolist() == list(range(0, 10))
     assert isinstance(tbl3, pa.Table) and np.all(pos3 >= 0)
+
+
+# ---- the acidtable source's one runtime path ---------------------------
+#
+# Each input below used to make the Arrow kernels hand the partition to
+# a row-at-a-time fallback. Every read mode now runs the kernels on it,
+# checked against the oracle (tests/acid_oracle.py) over the same plan.
+
+
+def _cdf_stream_rows(spark, tmp_path, name: str, opts: dict) -> list:
+    """Rows a change-feed stream of the acidtable source delivers when
+    drained (availableNow) into a memory sink."""
+    from data_lake_demo_spark.streaming.acid_source import register
+
+    register(spark)
+    reader = spark.readStream.format("acidtable")
+    q = (
+        reader.options(**{k: str(v) for k, v in opts.items()})
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None, q.exception()
+    return spark.table(name).collect()
+
+
+def _check_source_against_oracle(spark, tmp_path, p, start, modes, compare=None):
+    """Snapshot, batch change feed and change-feed stream of the table
+    at ``p`` equal the oracle over the same plan, in every mode. The
+    change feed covers commits ``start..latest``."""
+    from acid_oracle import canon_rows, oracle_batch, oracle_stream
+
+    from data_lake_demo_spark.streaming.acid_source import register
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    register(spark)
+    compare = compare or canon_rows
+    end = AcidTable(None, p).latest_version() + 1
+    for i, extra in enumerate(modes):
+        snap = {"path": p}
+        if "withRowIds" in extra:
+            snap["withRowIds"] = "true"
+        df = spark.read.format("acidtable").options(**snap).load()
+        assert compare(df.collect()) == compare(oracle_batch(snap, df.schema)), extra
+        opts = {"path": p, "readChangeFeed": "true", "startingVersion": start, **extra}
+        df = spark.read.format("acidtable").options(**opts).load()
+        got = df.collect()
+        assert got and compare(got) == compare(oracle_batch(opts, df.schema)), extra
+        name = f"oracle_{os.path.basename(str(tmp_path))}_{i}".replace("-", "_")
+        streamed = _cdf_stream_rows(spark, tmp_path, name, opts)
+        want = oracle_stream(opts, df.schema, start, end)
+        assert compare(streamed) == compare(want), extra
+
+
+def _net(rows, cols) -> dict:
+    """Net row multiset of change rows over ``cols``: +1 per
+    insert/postimage, −1 per delete/preimage."""
+    from collections import Counter
+
+    net: Counter = Counter()
+    for r in rows:
+        sign = 1 if r["_change_type"] in ("insert", "update_postimage") else -1
+        net[tuple(r[c] for c in cols)] += sign
+    return {k: n for k, n in net.items() if n}
+
+
+def test_acid_source_timestamp_columns_match_table_api(spark, tmp_path):
+    """A TIMESTAMP column (Spark writes INT96, which pyarrow reads as a
+    naive timestamp) reads as the UTC instant Spark's own parquet reader
+    returns, and a TIMESTAMP_NTZ column stays naive: the snapshot equals
+    ``AcidTable.snapshot()`` and the change feed nets to
+    ``AcidTable.changes()`` — batch and stream, plain and row-id modes.
+    (The Python row oracle cannot represent these values, so the table
+    API is the reference.)"""
+    from data_lake_demo_spark.streaming.acid_source import register
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    register(spark)
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    t.set_row_tracking()
+    base = F.to_timestamp(F.lit("2024-03-01 12:00:00"))
+    t.append(
+        spark.range(30)
+        .select(
+            F.col("id").alias("k"),
+            (base + F.expr("make_dt_interval(0, id, 0, 0)")).alias("ts"),
+            F.expr("CAST(timestamp'2024-01-01 00:00:00' AS timestamp_ntz)").alias("tn"),
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+        )
+        .repartition(3)
+    )
+    v0 = t.latest_version()
+    # the DSv2 writer stages Arrow batches: its TIMESTAMP column lands
+    # tz-aware, beside the naive INT96 of the verbs' Spark writes
+    spark.range(40, 45).select(
+        F.col("id").alias("k"),
+        (base + F.expr("make_dt_interval(2, id, 0, 0)")).alias("ts"),
+        F.expr("CAST(timestamp'2024-02-02 02:02:02' AS timestamp_ntz)").alias("tn"),
+        F.lit("w").alias("v"),
+    ).write.format("acidtable").mode("append").save(p)
+    t.merge(
+        spark.range(20, 45).select(
+            F.col("id").alias("k"),
+            (base + F.expr("make_dt_interval(1, id, 0, 0)")).alias("ts"),
+            F.expr("CAST(timestamp'2024-06-30 23:59:59.123456' AS timestamp_ntz)").alias("tn"),
+            F.lit("m").alias("v"),
+        ),
+        ["k"],
+    )
+    t.delete([("k", ">", 35), ("k", "<", 43)], mode="merge_on_read")
+    t.update({"ts": "ts + INTERVAL 1 DAY"}, [("k", "<", 5)])
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    src = spark.read.format("acidtable").option("path", p)
+    assert rows(src.load()) == rows(t.snapshot())
+    assert rows(src.option("withRowIds", "true").load()) == rows(
+        t.snapshot(with_row_ids=True)
+    )
+    for i, extra in enumerate(
+        ({}, {"withRowIds": "true"}, {"updateAsImages": "true"})
+    ):
+        opts = {"path": p, "readChangeFeed": "true", "startingVersion": v0 + 1, **extra}
+        got = spark.read.format("acidtable").options(**opts).load().collect()
+        with_rid = "withRowIds" in extra
+        want = t.changes(v0, t.latest_version(), with_row_ids=with_rid).collect()
+        cols = ["k", "ts", "tn", "v"] + (["_row_id"] if with_rid else [])
+        assert got and _net(got, cols) == _net(want, cols), extra
+        streamed = _cdf_stream_rows(spark, tmp_path, f"ts_stream_{i}", opts)
+        assert sorted(map(tuple, streamed)) == sorted(map(tuple, got)), extra
+
+
+def test_acid_source_nested_columns_match_oracle(spark, tmp_path):
+    """Array, map and struct columns — NaN, −0.0 and nulls inside them,
+    and null top-level values — run the kernels in every read mode.
+    Rewritten-but-identical nested rows cancel (a compaction diffs to
+    an empty feed), and changed ones pair by row id."""
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    t.set_row_tracking()
+    nan = float("nan")
+    schema = "k long, emb array<float>, tags map<string,double>, s struct<a:int,b:double>"
+
+    def row(k, bump=0.0):
+        if k % 9 == 0:
+            return (k, None, None, None)
+        emb = [k * 0.5 + bump, nan if k % 2 else -0.0, None if k % 3 == 0 else 1.0]
+        tags = {"a": float(k), "n": nan} if k % 4 else {"z": -0.0}
+        return (k, emb, tags, (k, nan if k % 5 == 0 else k * 0.25))
+
+    t.append(spark.createDataFrame([row(k) for k in range(30)], schema).repartition(3))
+    v0 = t.latest_version()
+    # k < 24 rewrites identical values (cancel); k >= 24 changes emb
+    t.merge(
+        spark.createDataFrame(
+            [row(k, 0.0 if k < 24 else 10.0) for k in range(18, 36)], schema
+        ),
+        ["k"],
+    )
+    t.delete([("k", "<", 3)], mode="merge_on_read")
+    t.update({"s": "named_struct('a', 0, 'b', CAST('NaN' AS double))"}, [("k", "=", 7)])
+    t.compact(n_files=1)
+    _check_source_against_oracle(
+        spark, tmp_path, p, v0 + 1,
+        (
+            {},
+            {"withRowIds": "true"},
+            {"updateAsImages": "true"},
+            {"updateAsImages": "true", "changeDiffBuckets": "3"},
+        ),
+    )
+    # the compaction's own feed is empty in every mode
+    last = t.latest_version()
+    for extra in ({}, {"withRowIds": "true"}):
+        df = (
+            spark.read.format("acidtable")
+            .options(path=p, readChangeFeed="true", startingVersion=last, **extra)
+            .load()
+        )
+        assert df.count() == 0, extra
+
+
+def test_acid_source_widened_column_mid_range_matches_oracle(spark, tmp_path):
+    """A change range spanning a type widening (int→long, float→double)
+    compares files of both widths under the widened type: carried rows
+    cancel, changed rows emit under the new type."""
+    from collections import Counter
+
+    from acid_oracle import canon
+
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    t.set_row_tracking()
+    t.append(
+        spark.createDataFrame(
+            [(k, k * 0.5, f"v{k}") for k in range(30)], "k int, x float, v string"
+        ).repartition(3)
+    )
+    v0 = t.latest_version()
+    t.widen_column("k", "long")
+    t.widen_column("x", "double")
+    t.merge(
+        spark.createDataFrame(
+            [(k, k * 0.5 + (1.0 if k % 2 else 0.0), f"v{k}") for k in range(20, 40)],
+            "k long, x double, v string",
+        ),
+        ["k"],
+    )
+    t.update({"v": "concat(v, '!')"}, [("k", "<", 4)])
+
+    def compare(rows):
+        # the oracle emits a narrow file's ints as ints; 1 == 1.0
+        return Counter(tuple(canon(v) for v in r) for r in rows)
+
+    _check_source_against_oracle(
+        spark, tmp_path, p, v0 + 1,
+        ({}, {"withRowIds": "true"}, {"updateAsImages": "true"}),
+        compare=compare,
+    )
+    snap = spark.read.format("acidtable").load(p)
+    assert dict(snap.dtypes) == {"k": "bigint", "x": "double", "v": "string"}
+
+
+def test_acid_source_null_row_ids_match_oracle(spark, tmp_path):
+    """A change range that starts before ``set_row_tracking()`` holds
+    files with no row ids: the row-id kernel diffs them on the oracle's
+    (content, id) key, with null ids emitted as null — single-task and
+    bucketed. Duplicate ids within one side take the same route."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from acid_oracle import _read_change_rows, canon_rows
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from data_lake_demo_spark.streaming.acid_source import (
+        _change_batches,
+        _ChangePartition,
+    )
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    t.append(
+        spark.createDataFrame(
+            [(k % 12, f"v{k % 12}") for k in range(30)], "k long, v string"
+        ).repartition(3)
+    )
+    t.merge(spark.createDataFrame([(1, "u"), (50, "n")], "k long, v string"), ["k"])
+    t.set_row_tracking()
+    t.merge(spark.createDataFrame([(2, "w"), (60, "m")], "k long, v string"), ["k"])
+    t.delete([("k", "=", 3)], mode="merge_on_read")
+    _check_source_against_oracle(
+        spark, tmp_path, p, 0,
+        (
+            {"withRowIds": "true"},
+            {"updateAsImages": "true"},
+            {"withRowIds": "true", "changeDiffBuckets": "3"},
+        ),
+    )
+
+    # duplicate ids: two files claiming the same manifest base
+    f1, f2 = str(tmp_path / "d1.parquet"), str(tmp_path / "d2.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), f1)
+    pq.write_table(pa.table({"k": [3, 2]}), f2)
+    part = _ChangePartition([(f1, None, 100), (f2, None, 100)], [(f1, None, 100)], 5, 0.0)
+    schema = (
+        spark.read.format("acidtable")
+        .options(path=p, readChangeFeed="true", withRowIds="true")
+        .load()
+        .select("k", "_change_type", "_commit_version", "_commit_timestamp", "_row_id")
+        .schema
+    )
+    for with_rid, as_images in ((True, False), (False, True), (True, True)):
+        target = to_arrow_schema(schema if with_rid else schema[:4])
+        got = [
+            r
+            for b in _change_batches(part, ["k"], with_rid, as_images, target)
+            for r in zip(*b.to_pydict().values())
+        ]
+        want = list(_read_change_rows(part, ["k"], with_rid, as_images))
+        assert canon_rows(got) == canon_rows(want) and got, (with_rid, as_images)
+
+
+def test_acid_source_plain_change_diff_buckets_match_single_task(spark, tmp_path):
+    """Plain-mode ``changeDiffBuckets=3``: each bucket task scopes its
+    own share of a commit's rows by a content hash that every process
+    computes alike. The union of a commit's buckets equals the
+    single-task diff and the oracle (duplicate rows, NaN, −0.0 and
+    null included), batch and stream, and no bucket holds them all."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from data_lake_demo_spark.streaming.acid_source import (
+        _cdf_partitions,
+        _change_batches,
+    )
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    nan = float("nan")
+    rows = [
+        (k % 15, f"v{k % 15}", nan if k % 7 == 0 else (-0.0 if k % 11 == 0 else k * 0.5))
+        for k in range(60)
+    ] + [(1, "v1", 2.5)] * 3
+    t.append(spark.createDataFrame(rows, "k long, v string, x double").repartition(3))
+    v0 = t.latest_version()
+    t.merge(spark.createDataFrame([(4, "m", None), (99, "n", -0.0)], "k long, v string, x double"), ["k"])
+    t.delete([("k", "<", 2)])
+    t.update({"x": "x + 1"}, [("k", ">", 10)])
+    t.compact(n_files=2)
+    _check_source_against_oracle(
+        spark, tmp_path, p, v0 + 1, ({"changeDiffBuckets": "3"},)
+    )
+    single = (
+        spark.read.format("acidtable")
+        .options(path=p, readChangeFeed="true", startingVersion=v0 + 1)
+        .load()
+    )
+    bucketed = (
+        spark.read.format("acidtable")
+        .options(path=p, readChangeFeed="true", startingVersion=v0 + 1, changeDiffBuckets="3")
+        .load()
+    )
+    from acid_oracle import canon_rows
+
+    assert canon_rows(single.collect()) == canon_rows(bucketed.collect())
+    # the buckets really split the wide delete commit's rows
+    target = to_arrow_schema(single.schema)
+    parts = [q for q in _cdf_partitions(t, v0 + 2, v0 + 3, buckets=3)]
+    assert [q.bucket for q in parts] == [(0, 3), (1, 3), (2, 3)]
+    sizes = [
+        sum(b.num_rows for b in _change_batches(q, ["k", "v", "x"], False, False, target))
+        for q in parts
+    ]
+    assert sum(sizes) > 0 and max(sizes) < sum(sizes), sizes
+
+
+def test_acid_source_broken_file_fails_with_kernel_error(spark, tmp_path):
+    """A truncated parquet file in a change partition fails the Spark
+    task with the kernel's own pyarrow error — there is no other path
+    to fall back to, so nothing is retried row by row."""
+    from data_lake_demo_spark.streaming.acid_source import register
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    register(spark)
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    t.append(spark.createDataFrame([(k, f"v{k}") for k in range(20)], "k long, v string"))
+    v0 = t.latest_version()
+    t.merge(spark.createDataFrame([(1, "u"), (30, "n")], "k long, v string"), ["k"])
+    added = t._read_commit(v0 + 1).add[0]["path"]
+    full = os.path.join(p, added)
+    with open(full, "r+b") as fh:
+        fh.truncate(os.path.getsize(full) // 2)
+    for opts in (
+        {"readChangeFeed": "true", "startingVersion": v0 + 1},
+        {},
+    ):
+        with pytest.raises(Exception) as ei:
+            spark.read.format("acidtable").options(path=p, **opts).load().collect()
+        msg = str(ei.value)
+        assert "ArrowInvalid" in msg or "Parquet" in msg, msg[-2000:]
+        assert "_read_change_rows" not in msg and "falling back" not in msg
+
+
+def test_acid_dsv2_writer_raises_on_colmap_error(spark, tmp_path, monkeypatch):
+    """A failed column-mapping lookup is an error, not "no mapping": on
+    a column-mapped table, swallowing it would stage the write under
+    logical names. Only a table with no commits yet has no mapping."""
+    from pyspark.sql import types as T
+
+    from data_lake_demo_spark.streaming import acid_source
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    # no commits yet: no mapping, no log error
+    assert acid_source._writer_physical({"path": p}, schema) == (schema.json(), None)
+    t.append(spark.createDataFrame([(1,)], "k long"))
+
+    def broken(self, as_of=None):
+        raise OSError("log store unavailable")
+
+    monkeypatch.setattr(AcidTable, "_colmap", broken)
+    with pytest.raises(OSError, match="log store unavailable"):
+        acid_source._AcidBatchWriter({"path": p}, schema, False)
+    with pytest.raises(OSError, match="log store unavailable"):
+        acid_source._reverse_colmap({"path": p})

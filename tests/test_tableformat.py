@@ -4004,3 +4004,45 @@ def test_drop_branch_requires_existing(spark, tmp_path):
     t.drop_branch("b")
     with pytest.raises(ValueError):
         t.drop_branch("b")  # tombstoned: dropping again raises
+
+
+@pytest.mark.parametrize("encode", ["driver", "executor"])
+def test_dv_hits_map_to_exact_file_with_suffix_colliding_names(
+    spark, tmp_path, monkeypatch, encode
+):
+    """A merge-on-read DELETE maps each file URI Spark reports back to
+    its table-relative file exactly. With a bare suffix match, the hits
+    in ``y-x.parquet`` were attributed to ``x.parquet`` (its name is a
+    suffix), masking the wrong rows — on both the driver and the
+    executor deletion-vector encode paths; the second delete also
+    unions with the vectors the first one wrote."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    if encode == "executor":
+        monkeypatch.setattr(AcidTable, "_DV_ENCODE_DRIVER_MAX_ROWS", -1)
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    names = ["1-x.parquet", "x.parquet", "y-x.parquet"]
+    for i, n in enumerate(names):
+        ks = pa.array([10 * i + j for j in range(5)], type=pa.int64())
+        pq.write_table(pa.table({"k": ks}), os.path.join(p, n))
+    actions = []
+    for n in names:
+        rows, stats = t._file_meta(n)
+        stats["#rows"] = [rows]
+        actions.append({"path": n, "stats": stats})
+    t.commit_staged(actions, T.StructType([T.StructField("k", T.LongType())]).json())
+    t.delete([("k", "in", [3, 13, 21])], mode="merge_on_read")
+    t.delete([("k", "in", [0, 14, 24])], mode="merge_on_read")
+    got = sorted(r["k"] for r in t.snapshot().collect())
+    gone = {0, 3, 13, 14, 21, 24}
+    assert got == sorted(k for i in range(3) for k in range(10 * i, 10 * i + 5) if k not in gone)
+    assert {p: sorted(v) for p, v in t.deletion_vectors().items()} == {
+        "1-x.parquet": [0, 3],
+        "x.parquet": [3, 4],
+        "y-x.parquet": [1, 4],
+    }
